@@ -1226,22 +1226,12 @@ def _blk_df(spark: SparkSession, blks: list[int]):
     a row-of-tuples createDataFrame re-serializes it one Python
     object at a time — the collect+rebuild round-trip, not broadcast
     size, was the sf100 latency cost (ADVICE r14). Ship it as ONE
-    Arrow batch instead: a pandas int64 frame with Arrow conversion
-    pinned on for the call."""
+    Arrow batch instead (tables.local_pandas_df)."""
     import pandas as pd
 
-    pdf = pd.DataFrame({"blk": pd.Series(blks, dtype="int64")})
-    key = "spark.sql.execution.arrow.pyspark.enabled"
-    # One-way idempotent enable, never restored (review r15): a
-    # set/createDataFrame/unset window races concurrent servers in
-    # the same session — an interleaved unset silently drops a peer
-    # back to the row-at-a-time path (the exact sf100 cost this
-    # exists to remove). Leaving Arrow on is semantics-preserving for
-    # this int64-only frame and for every other createDataFrame in
-    # the package (all literal-list schemas, Arrow-indifferent).
-    if spark.conf.get(key, "false") != "true":
-        spark.conf.set(key, "true")
-    return spark.createDataFrame(pdf)
+    from batch_processing_etl_orchestration_spark.tables import local_pandas_df
+
+    return local_pandas_df(spark, pd.DataFrame({"blk": pd.Series(blks, dtype="int64")}))
 
 
 def _coarse_blk_pred(col: str, blks: list[int]):

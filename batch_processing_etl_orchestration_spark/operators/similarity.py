@@ -127,9 +127,9 @@ def _streamed_topk(queries, candidates, k, q_id, c_id, q_vec, c_vec, sims_fn):
         # an empty query side would otherwise give qmat shape (0,) and
         # raise an opaque broadcasting error inside executors
         cols = [q_id] + [f.name for f in passthrough] + ["cosine_sim", "rank"]
-        empty = candidates.sparkSession.createDataFrame(
-            [], out_schema + ", rank INT"
-        )
+        from batch_processing_etl_orchestration_spark.tables import empty_df
+
+        empty = empty_df(candidates.sparkSession, out_schema + ", rank INT")
         return empty.select(*cols)
     qids = np.array([r[0] for r in qrows], dtype=np.int64)
     qmat = np.array([list(r[1]) for r in qrows], dtype=np.float64)

@@ -19,6 +19,7 @@ from batch_processing_etl_orchestration_spark.sources.xlsx import (
     read_workbook,
     rows_to_header_and_data,
 )
+from batch_processing_etl_orchestration_spark.tables import local_arrow_df
 
 
 def read_csv_dim(spark: SparkSession, path: str) -> DataFrame:
@@ -53,7 +54,8 @@ def read_excel_sheets(
     """S5 — multi-sheet Excel scan (pd.read_excel(sheet_name=[...]),
     EIA930PipelineHourlyData.py:33-34). Sheets parse on the driver
     (stdlib zip+XML — workbook dims are driver-small by contract) and
-    become broadcast-ready DataFrames via createDataFrame. ``max_cols``
+    become broadcast-ready Arrow-backed LocalRelations
+    (tables.local_arrow_df). ``max_cols``
     mirrors the reference's first-6-column BA projection (.iloc[:, :6],
     EIA930PipelineHourlyData.py:34)."""
     out: dict[str, DataFrame] = {}
@@ -82,7 +84,7 @@ def read_excel_sheets(
             )
             for row in data
         ]
-        out[name] = spark.createDataFrame(coerced, schema=schema)
+        out[name] = local_arrow_df(spark, coerced, schema)
     return out
 
 

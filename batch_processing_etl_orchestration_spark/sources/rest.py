@@ -8,8 +8,17 @@ EIA814PipelineMonthlyData.py:15-60). That *is* predicate/projection
 pushdown done by hand (SURVEY §4); here the pushdown params are an
 explicit request spec, the HTTP call is an injected callable (offline
 tests, retry policy at the caller), and the page rows become a
-DataFrame via spark.createDataFrame with explicit schema (bronze is
-schema-on-read: all strings).
+DataFrame with an explicit schema (bronze is schema-on-read: strings,
+plus the numeric arrays of the weather feed).
+
+The bronze frame is an Arrow-backed ``LocalRelation``
+(``tables.local_arrow_df``), not a list-based ``createDataFrame``: that
+plans a Python RDD, and every merge the job runs evaluates it again,
+starting Python workers each time. It must stay NaN-preserving, so it
+does not go through the pandas path (``tables.local_rows_df``), which
+turns NaN into null: Open-Meteo hours carry NaN for missing readings,
+and the landed values and the per-state means/std built from them
+would change.
 
 Scale: ingest loops are driver-side by design (the API is the
 bottleneck, not Spark); for fan-out across many endpoints/coordinates
@@ -26,6 +35,8 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from batch_processing_etl_orchestration_spark.tables import local_arrow_df
 
 
 @dataclass
@@ -71,13 +82,14 @@ class PaginatedRestSource:
             offset += self.page_size
 
     def to_dataframe(self, spark: SparkSession, schema: str) -> DataFrame:
-        """All pages → one DataFrame (the union-of-pages O6). Explicit
-        schema — bronze columns are strings, coercion happens in
-        silver (P4/P5)."""
+        """All pages → one LocalRelation (the union-of-pages O6).
+        Explicit schema — bronze columns are strings, coercion happens
+        in silver (P4/P5); values land as the list-based
+        createDataFrame would land them, NaN included."""
         all_rows: list[dict] = []
         for page in self.pages():
             all_rows.extend(page)
-        return spark.createDataFrame(all_rows, schema=schema)
+        return local_arrow_df(spark, all_rows, schema)
 
 
 def scrub_params(params: dict[str, Any], *secret_keys: str) -> dict[str, Any]:

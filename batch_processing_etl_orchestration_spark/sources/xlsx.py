@@ -25,8 +25,9 @@ pandas/openpyxl where available.
 
 Scale: workbook dimensions are driver-small by contract (the
 reference's BA sheet is a few hundred rows). The parsed rows become a
-Spark DataFrame via ``createDataFrame`` and are broadcast into joins —
-the same posture as every other dimension source in sources/.
+Spark LocalRelation via ``tables.local_arrow_df`` and are broadcast
+into joins — the same posture as every other dimension source in
+sources/.
 """
 
 from __future__ import annotations

@@ -58,6 +58,40 @@ def local_rows_df(spark: SparkSession, rows, schema: str) -> DataFrame:
     return local_pandas_df(spark, pdf, schema)
 
 
+def local_arrow_df(spark: SparkSession, rows, schema) -> DataFrame:
+    """Driver rows as an Arrow-backed LocalRelation that keeps the
+    list path's values exactly, NaN included (the pandas path of
+    local_rows_df turns NaN into null). Rows are dicts keyed by field
+    name, a missing key landing as null, or sequences in field order.
+    Non-string values in top-level STRING fields render as the list
+    path renders them: str(v), booleans as 'true'/'false'. No Python
+    RDD and no Arrow conf: the pyarrow.Table goes to the JVM as is."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StringType, _parse_datatype_string
+
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    arrow_schema = to_arrow_schema(schema)
+    rows = list(rows)
+    columns = []
+    for i, f in enumerate(schema.fields):
+        col = [r.get(f.name) if isinstance(r, dict) else r[i] for r in rows]
+        if isinstance(f.dataType, StringType):
+            col = [_list_path_string(v) for v in col]
+        columns.append(pa.array(col, type=arrow_schema.field(i).type))
+    table = pa.Table.from_arrays(columns, schema=arrow_schema)
+    return spark.createDataFrame(table, schema=schema)
+
+
+def _list_path_string(v):
+    if v is None or isinstance(v, str):
+        return v
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    return str(v)
+
+
 def local_pandas_df(spark: SparkSession, pdf, schema=None) -> DataFrame:
     """createDataFrame(pandas) with Arrow forced on (see
     local_rows_df) — same values, same schema, LocalRelation plan

@@ -16,10 +16,8 @@ Type mapping (SURVEY §1.2): TEXT→STRING, FLOAT→DOUBLE, INT→INT,
 TIMESTAMP→TIMESTAMP_NTZ (naive UTC wall time, matching the
 reference's timezone-less Postgres TIMESTAMP).
 
-Scale: tables are written partitioned by a date-derived column where
-the schema has one — on a 100 TB lakehouse this gives partition
-pruning for every date-bounded query the reference issues (its fetch
-horizons, BASELINE.md).
+Scale: tables are unpartitioned parquet; every merge lands one
+right-sized set of files per table (see merge_idempotent).
 """
 
 from __future__ import annotations
@@ -179,8 +177,8 @@ def create_table(
     spark: SparkSession, name: str, columns: dict[str, str], db: str = DEFAULT_DB
 ) -> None:
     """K3 — CREATE TABLE IF NOT EXISTS from a {col: type} dict
-    (databaseOperations.py:28-45). Parquet-backed managed table;
-    date-typed leading column becomes the partition key at scale."""
+    (databaseOperations.py:28-45). Parquet-backed managed table,
+    unpartitioned."""
     cols = ", ".join(f"`{c}` {t}" for c, t in columns.items())
     spark.sql(f"CREATE TABLE IF NOT EXISTS {db}.{name} ({cols}) USING parquet")
 
@@ -289,7 +287,14 @@ def merge_idempotent(
     duplicates rows — SURVEY §2.9 'exactly-once-ish'). Without Delta in
     this environment: append only rows whose natural key is absent
     (left-anti against the existing table). On a Delta/Iceberg
-    lakehouse this becomes a single MERGE INTO keyed the same way."""
-    existing = spark.table(f"{db}.{name}").select(*key_cols)
-    fresh = df.join(existing, on=key_cols, how="left_anti")
+    lakehouse this becomes a single MERGE INTO keyed the same way.
+
+    Rows are matched to the table's columns by name: the USING join
+    moves the key columns to the front and insertInto writes by
+    position, so the appended rows are re-selected in the table's
+    column order. They are also rebalanced, so AQE lands them as one
+    right-sized set of files instead of one file per input slice."""
+    table = spark.table(f"{db}.{name}")
+    fresh = df.join(table.select(*key_cols), on=key_cols, how="left_anti")
+    fresh = fresh.select(*table.columns).hint("rebalance")
     fresh.write.mode("append").insertInto(f"{db}.{name}")

@@ -3,6 +3,8 @@ the idempotent-rerun guarantee the reference lacks."""
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pytest
 
 from batch_processing_etl_orchestration_spark.pipelines.jobs import (
@@ -41,6 +43,16 @@ def _raw_930(spark, type_col):
     )
 
 
+def _landed_matches(spark, table, gold):
+    """Landed rows equal the gold frame's, compared column by column
+    by name over every column the gold frame has."""
+    landed = spark.table(f"{DB}.{table}")
+    cols = [c for c in landed.columns if c in gold.columns]
+    rows = Counter(tuple(r) for r in landed.select(*cols).collect())
+    assert rows == Counter(tuple(r) for r in gold.select(*cols).collect())
+    return landed
+
+
 def test_eia930_job_end_to_end_idempotent(spark):
     ba = spark.createDataFrame([("PJM",), ("MISO",)], "ba_code STRING")
     args = dict(
@@ -63,6 +75,14 @@ def test_eia930_job_end_to_end_idempotent(spark):
     # rerun the whole job with identical input → no duplicates anywhere
     run_eia930_job(spark, **args)
     assert spark.table(f"{DB}.eia930_hourly_net_generation_by_energy_source").count() == n1
+    # the net-generation merge keys (date, respondent, fueltype) do not
+    # lead its DDL: the rerun added no rows there either, and
+    # fueltype and respondent_name each hold their own value
+    t = "eia930_cleaned_hourly_net_generation"
+    landed = _landed_matches(spark, t, gold[t])
+    assert {(r["respondent_name"], r["fueltype"]) for r in landed.collect()} == {
+        ("PJM Inc", "NG"), ("PJM Inc", "D"), ("Mid", "NG")
+    }
 
 
 def test_openmeteo_job(spark):
@@ -98,6 +118,14 @@ def test_eia7a_job(spark):
     out = run_eia7a_job(spark, [p1], "2024-Q1")
     assert out.count() == 1
     assert spark.table(f"{DB}.eia7a_cleaned_quarterly_coal_imports_and_exports").count() == 1
+    # rerun: the merge keys (date, country_id) do not lead the DDL; no
+    # row is added and every column holds its own value
+    run_eia7a_job(spark, [p1], "2024-Q1")
+    t = "eia7a_cleaned_quarterly_coal_imports_and_exports"
+    [row] = _landed_matches(spark, t, out).collect()
+    assert (row["country_id"], row["country_description"], row["price"]) == (
+        "C1", "Canada", 12.5
+    )
 
 
 def test_eia814_job(spark):

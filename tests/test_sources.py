@@ -3,6 +3,8 @@
 
 from __future__ import annotations
 
+import math
+
 from batch_processing_etl_orchestration_spark.sources import (
     LastModifiedCache,
     PaginatedRestSource,
@@ -49,6 +51,49 @@ def test_pagination_stop_predicate(spark):
     )
     assert sum(len(p) for p in src.pages()) == 2
     assert calls == [0, 1]
+
+
+def _nan_safe(v):
+    """Rows with NaN made comparable (NaN != NaN) and lists as tuples."""
+    if isinstance(v, float) and math.isnan(v):
+        return "NaN"
+    if isinstance(v, (list, tuple)):
+        return tuple(_nan_safe(x) for x in v)
+    return v
+
+
+def test_bronze_frame_matches_list_path_as_local_relation(spark):
+    """The bronze contract: to_dataframe lands exactly what a list-based
+    createDataFrame lands — non-string values in STRING fields rendered
+    as str(v) (booleans as 'true'/'false'), None and missing keys as
+    null, NaN kept as NaN inside nested arrays, back-ticked names — but
+    as a LocalRelation, not a scan of a Python RDD."""
+    schema = (
+        "period STRING, `respondent-name` STRING, value STRING, flag STRING, "
+        "n LONG, values ARRAY<ARRAY<DOUBLE>>"
+    )
+    page = [
+        {"period": "2024-01-01T00", "respondent-name": "PJM Inc", "value": 123,
+         "flag": True, "n": 7, "values": [[1.0, float("nan")], None]},
+        {"period": "2024-01-01T01", "respondent-name": None, "value": 1.5,
+         "flag": False, "n": None, "values": [[None, 2.0]]},
+        {"period": "2024-01-01T02", "value": 1e20, "extra": "dropped"},
+    ]
+    fetch, _ = _fake_fetch([page])
+    df = PaginatedRestSource(fetch=fetch, endpoint="e", page_size=3).to_dataframe(
+        spark, schema
+    )
+    reference = spark.createDataFrame(page, schema=schema)
+    assert df.schema == reference.schema
+    got = [_nan_safe(tuple(r)) for r in df.collect()]
+    assert got == [_nan_safe(tuple(r)) for r in reference.collect()]
+    assert got == [
+        ("2024-01-01T00", "PJM Inc", "123", "true", 7, ((1.0, "NaN"), None)),
+        ("2024-01-01T01", None, "1.5", "false", None, ((None, 2.0),)),
+        ("2024-01-01T02", None, "1e+20", None, None, None),
+    ]
+    plan = df._jdf.queryExecution().optimizedPlan()
+    assert plan.getClass().getSimpleName() == "LocalRelation"
 
 
 def test_last_modified_cache():

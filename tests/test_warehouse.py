@@ -58,6 +58,25 @@ def test_merge_idempotent_rerun_no_duplicates(spark):
     truncate_table(spark, t, DB)
 
 
+def test_merge_lands_one_file_by_column_name(spark):
+    """A 4-partition, 100-row merge lands as one right-sized file, each
+    value in its own column although the merge key is not the leading
+    column."""
+    from pyspark.sql import functions as F
+
+    t = "eia930_energy_sources"
+    df = spark.range(100).repartition(4).select(
+        F.concat(F.lit("code"), F.col("id")).alias("energy_source_code"),
+        F.concat(F.lit("name"), F.col("id")).alias("energy_source_name"),
+    )
+    assert df.rdd.getNumPartitions() == 4
+    merge_idempotent(spark, df, t, ["energy_source_name"], DB)
+    landed = spark.table(f"{DB}.{t}")
+    assert len(landed.inputFiles()) == 1
+    assert sorted(map(tuple, landed.collect())) == sorted(map(tuple, df.collect()))
+    truncate_table(spark, t, DB)
+
+
 def test_jdbc_round_trip_embedded_derby(spark, tmp_path):
     """K1 executed against a real RDBMS: Apache Derby (embedded, ships
     in Spark's jars) — write_jdbc creates the table, append mode adds
