@@ -21,7 +21,7 @@ Massive Datasets ch.3) and SimHash (Charikar 2002).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 _NUM_HASHES = 32
@@ -601,9 +601,9 @@ def connected_components(
 
     Each round is two key-partitioned joins on compact (long, long)
     rows; ``localCheckpoint`` truncates lineage so round N doesn't
-    replay rounds 1..N-1; the driver-side loop only inspects a
-    monotone scalar (sum of labels), never data. ``max_rounds`` is a
-    divergence guard, not a tuning knob — hitting it raises."""
+    replay rounds 1..N-1; an Observation on it counts dropped labels and
+    the loop stops at zero: one action per round, and a metric that fired
+    twice is harmless. Hitting the ``max_rounds`` divergence guard raises."""
     edges = (
         pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
         .union(pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
@@ -621,7 +621,6 @@ def connected_components(
             F.least(F.col("src"), F.col("_md")).alias("comp"),
         )
     )
-    prev_sum = None
     for round_no in range(max_rounds):
         nbr_min = (
             edges.join(labels, edges.src == labels.id)
@@ -629,7 +628,7 @@ def connected_components(
             .agg(F.min("comp").alias("nbr_comp"))
         )
         stepped = labels.join(nbr_min, labels.id == nbr_min.dst, "left").select(
-            "id", F.least("comp", "nbr_comp").alias("comp")
+            "id", F.col("comp").alias("_prev"), F.least("comp", "nbr_comp").alias("comp")
         )
         if round_no >= 2:
             # pointer jump: comp values are node ids, so resolve each
@@ -644,12 +643,12 @@ def connected_components(
             )
             stepped = stepped.join(
                 roots, stepped.comp == roots._rid, "left"
-            ).select("id", F.least("comp", "_rcomp").alias("comp"))
-        labels = stepped.localCheckpoint(eager=True)
-        cur_sum = labels.agg(F.sum("comp")).first()[0]
-        if cur_sum == prev_sum:
+            ).select("id", "_prev", F.least("comp", "_rcomp").alias("comp"))
+        obs, dropped = Observation(), F.col("comp") < F.col("_prev")
+        labels = stepped.observe(obs, F.count(F.when(dropped, 1)).alias("n"))
+        labels = labels.select("id", "comp").localCheckpoint(eager=True)
+        if obs.get["n"] == 0:
             return labels
-        prev_sum = cur_sum
     raise RuntimeError(
         f"connected_components did not converge in {max_rounds} rounds"
     )

@@ -12,8 +12,16 @@ half-swapped mixture, and a crashed mutation leaves only an orphan
 directory (cleaned opportunistically), exactly the manifest discipline
 of warehouse.snapshots.VersionedTable._commit.
 
-Layout: current -> gen-<hex>/{<stores...>, segments/<name>/...,
-tombstones/t-<hex>/}.
+Layout: current -> gen-<hex>/{<stores...>, _corpus.json,
+segments/<name>/{<stores...>, _corpus.json}, tombstones/t-<hex>/}.
+
+The base class owns the store-stats sidecar ``_corpus.json`` beside
+the base and every segment: ``n_docs`` (rows of the id-keyed store),
+``id_lo`` and ``id_hi`` (its id span), plus any extra aggregate a
+subclass asks for (PostingsIndex's ``total_dl``). Builds, landings
+and compactions write their id-keyed store through _write_observed,
+which records the sidecar from the store write's own job.
+_write_stats is the sidecar's one writer, _read_stats its one parser.
 
 Subclass contract:
   _STORES        every base-generation store dir (exists() checks all)
@@ -22,7 +30,8 @@ Subclass contract:
   _live_ids(gen) one-column DataFrame of ids currently live (for
                  add-segment id-disjointness)
   _compact_once(n_files)  the store-specific fold, built on the
-                 manifest/publish/rescue helpers here
+                 manifest/publish/rescue helpers here; it writes its
+                 id-keyed store through _write_observed like a landing
 
 The concurrency protocol (lost-update chase, retract-on-tombstone,
 fold-retry gated to vanished files, post-publish rescue) was built and
@@ -37,8 +46,12 @@ from __future__ import annotations
 import os
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+# The store-stats sidecar (module docstring); the historical name keeps
+# sidecars already on disk readable.
+_STATS_FILE = "_corpus.json"
 
 # Sentinel distinguishing "caller did not pin tombstones — re-list the
 # generation's dirs" (_UNSET) from "caller holds a snapshot in which no
@@ -561,26 +574,99 @@ class GenerationalStore:
         # harmless: it hides rows that are already gone).
         self._chase("tombstones", tname, gen0)
 
+    # -- store-stats sidecar -------------------------------------------
+
+    @staticmethod
+    def _write_observed(
+        df: DataFrame, out: str, store: str, id_col: str, *extra,
+        partition_by: str | None = None,
+    ) -> dict:
+        """Write `df` as the id-keyed store `out/store` and record the
+        sidecar from the same job: an Observation counts the rows and
+        takes the min and max of `id_col`, plus any `extra` aliased
+        aggregates. Returns the recorded stats.
+
+        `df` arrives already range-partitioned and sorted, so the
+        observe sits ABOVE the repartition: range partitioning runs a
+        sampling pass over its child, and a metrics node below it
+        fires once per pass (the count comes out doubled)."""
+        obs = Observation()
+        writer = df.observe(
+            obs,
+            F.count(F.lit(1)).alias("n_docs"),
+            F.min(F.col(id_col)).alias("id_lo"),
+            F.max(F.col(id_col)).alias("id_hi"),
+            *extra,
+        ).write.mode("errorifexists")
+        if partition_by is not None:
+            writer = writer.partitionBy(partition_by)
+        writer.parquet(os.path.join(out, store))
+        stats = obs.get
+        GenerationalStore._write_stats(out, stats)
+        return stats
+
+    @staticmethod
+    def _write_stats(out: str, stats: dict) -> None:
+        """The one writer of the sidecar. Unknown (None) values are
+        left out; readers then fall back to a scan."""
+        import json
+
+        os.makedirs(out, exist_ok=True)
+        with open(os.path.join(out, _STATS_FILE), "w") as f:
+            json.dump(
+                {k: int(v) for k, v in stats.items() if v is not None}, f
+            )
+
+    @staticmethod
+    def _read_stats(store_dir: str) -> dict | None:
+        """The one parser of the sidecar: its integer fields, or None
+        when the file is missing or unreadable."""
+        import json
+
+        try:
+            with open(os.path.join(store_dir, _STATS_FILE)) as f:
+                return {
+                    k: int(v) for k, v in json.load(f).items()
+                    if v is not None
+                }
+        except (OSError, ValueError, TypeError, AttributeError):
+            return None
+
+    def _store_stats(self, gen: str, segs=None, need=()) -> list | None:
+        """[(store_dir, stats)] for the base and every segment of
+        `gen` (or the pinned `segs`), from the sidecars alone — no
+        Spark job. None when any store lacks `n_docs`, or a NON-EMPTY
+        store lacks a key in `need` (an older sidecar: stay
+        conservative). Sound forever: stores are immutable and
+        tombstones only hide rows, so a recorded count stays an upper
+        bound on live ids and a recorded [id_lo, id_hi] a superset of
+        them."""
+        out = []
+        for d in [gen] + (self._segment_dirs(gen) if segs is None else segs):
+            st = self._read_stats(d)
+            if st is None or "n_docs" not in st or (
+                st["n_docs"] and any(k not in st for k in need)
+            ):
+                return None
+            out.append((d, st))
+        return out
+
     def _live_count_hint(self, gen: str) -> int | None:
-        """Upper bound on the number of live ids in `gen`, derived
-        from sidecar METADATA only (no Spark job), or None when
-        unknown. A 0 answer lets _land_segment skip the
-        id-disjointness scan — correct because tombstones can only
-        hide rows, never add live ids, so an index whose stores all
-        record zero rows has no id to collide with. Subclasses
-        override where their stores carry row-count sidecars."""
-        return None
+        """Upper bound on the number of live ids in `gen`, or None
+        when unknown. A 0 answer lets _land_segment skip the
+        id-disjointness scan: an index whose stores all record zero
+        rows has no id to collide with."""
+        st = self._store_stats(gen)
+        return None if st is None else sum(s["n_docs"] for _, s in st)
 
     def _live_id_hi_hint(self, gen: str) -> int | None:
-        """Upper bound on the maximum live id in `gen`, from sidecar
-        METADATA only (no Spark job), or None when unknown. Must
-        never under-report: _ids_past_watermark skips the
-        disjointness scan when a batch's min id exceeds it. Safe by
-        construction where subclasses record each store's actual max
-        id at write time — stores are immutable and tombstones only
-        hide rows, so a recorded max stays an upper bound forever.
-        Subclasses override where their sidecars carry it."""
-        return None
+        """Upper bound on the maximum live id in `gen`, or None when
+        unknown. Must never under-report: _ids_past_watermark skips
+        the disjointness scan when a batch's min id exceeds it."""
+        st = self._store_stats(gen, need=("id_hi",))
+        if st is None:
+            return None
+        return max((s["id_hi"] for _, s in st if s["n_docs"]), default=None)
 
     def _ids_past_watermark(self, gen: str, batch_lo: int) -> bool:
         """True iff sidecar metadata PROVES the batch is append-only:
@@ -592,25 +678,11 @@ class GenerationalStore:
 
     def _live_id_intervals(self, gen: str):
         """[(store_dir, id_lo, id_hi)] for every NON-EMPTY live store,
-        from the `_corpus.json` sidecars alone (no Spark job), or None
-        when any non-empty store lacks an interval (pre-r16 sidecar,
-        compacted base that was not re-counted, legacy layout — stay
-        conservative). Sound forever like the watermark: stores are
-        immutable and tombstones only hide rows, so a recorded
-        [id_lo, id_hi] remains a superset of the store's live ids."""
-        import json
-
-        out = []
-        for d in [gen] + self._segment_dirs(gen):
-            try:
-                with open(os.path.join(d, "_corpus.json")) as f:
-                    st = json.load(f)
-                if int(st["n_docs"]) == 0:
-                    continue
-                out.append((d, int(st["id_lo"]), int(st["id_hi"])))
-            except (OSError, ValueError, KeyError, TypeError):
-                return None
-        return out
+        or None when any of them lacks an interval."""
+        st = self._store_stats(gen, need=("id_lo", "id_hi"))
+        if st is None:
+            return None
+        return [(d, s["id_lo"], s["id_hi"]) for d, s in st if s["n_docs"]]
 
     def _overlapping_live_dirs(
         self, gen: str, lo: int, hi: int

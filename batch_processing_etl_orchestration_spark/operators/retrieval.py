@@ -277,7 +277,7 @@ class PostingsIndex(GenerationalStore):
                 ("df_blk", big),
             ],
         )
-        PostingsIndex._dump_corpus_json(out, 0, 0, None)
+        PostingsIndex._write_stats(out, {"n_docs": 0, "total_dl": 0})
 
     @staticmethod
     def _write_stores(
@@ -348,15 +348,7 @@ class PostingsIndex(GenerationalStore):
             # (see _impact_offsets) — collect it ONCE and compute the
             # exclusive prefix offsets with exact integer arithmetic
             # on the driver: the offsets frame becomes a literal
-            # (no recompute per reference), and the corpus totals
-            # (n_docs = Σ cnt, total_dl = Σ dl·cnt) fall out for FREE,
-            # so the impact path skips the separate doclens read-back
-            # aggregation _write_corpus_stats would run. The max doc
-            # id (the _land_segment append-only watermark) rides the
-            # doclens WRITE as an observed metric — same job, no
-            # extra pass (r15 optimization).
-            from pyspark.sql import Observation
-
+            # (no recompute per reference).
             hist = (
                 stats.groupBy("maxtf", "dl")
                 .agg(F.count(F.lit(1)).alias("cnt"))
@@ -380,29 +372,15 @@ class PostingsIndex(GenerationalStore):
             offs = local_rows_df(
                 spark, offs_rows, "maxtf BIGINT, dl BIGINT, cnt BIGINT, off BIGINT"
             )
-            obs = Observation()
             dl_df = PostingsIndex._with_impact_blk(
                 stats.select(id_col, "dl", "maxtf"), id_col, offs,
                 blk_base,
             ).select(id_col, "dl", "maxtf", "blk")
-            (
-                dl_df
-                .repartitionByRange(max(1, n_files // 4), "blk")
-                .sortWithinPartitions("blk", id_col)
-                # observe sits ABOVE the repartition: range partitioning
-                # runs a sampling pass over its child, and a metrics
-                # node below it fires once per pass (measured: count
-                # doubles; max is idempotent but keep both placements
-                # consistent)
-                .observe(
-                    obs,
-                    F.max(F.col(id_col)).alias("hi"),
-                    F.min(F.col(id_col)).alias("lo"),
-                )
-                .write.mode("errorifexists")
-                .parquet(os.path.join(out, "doclens"))
+            PostingsIndex._write_observed(
+                dl_df.repartitionByRange(max(1, n_files // 4), "blk")
+                .sortWithinPartitions("blk", id_col),
+                out, "doclens", id_col, F.sum("dl").alias("total_dl"),
             )
-            id_hi, id_lo = obs.get["hi"], obs.get["lo"]
             dls = (
                 spark.read.schema(dl_df.schema)
                 .parquet(os.path.join(out, "doclens"))
@@ -430,34 +408,12 @@ class PostingsIndex(GenerationalStore):
         )
         if not impact:
             # doclens clustered on the id so doc-id range predicates
-            # reach the parquet footers. Corpus stats (n_docs,
-            # total_dl) and the max-id watermark ride the SAME write
-            # as observed metrics — the separate read-back aggregation
-            # _write_corpus_stats ran per build/ingest is gone (r15
-            # optimization: one fewer action per micro-batch landing).
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            (
+            # reach the parquet footers; the corpus stats ride the
+            # write (genstore._write_observed)
+            PostingsIndex._write_observed(
                 dls.repartitionByRange(max(1, n_files // 4), id_col)
-                .sortWithinPartitions(id_col)
-                # observe sits ABOVE the repartition: range partitioning
-                # runs a sampling pass over its child, and a metrics
-                # node below it fires once per pass — the count comes
-                # out DOUBLED (measured on this Spark)
-                .observe(
-                    obs,
-                    F.count(F.lit(1)).alias("n"),
-                    F.sum("dl").alias("t"),
-                    F.max(F.col(id_col)).alias("hi"),
-                    F.min(F.col(id_col)).alias("lo"),
-                )
-                .write.mode("errorifexists")
-                .parquet(os.path.join(out, "doclens"))
-            )
-            m = obs.get
-            PostingsIndex._dump_corpus_json(
-                out, int(m["n"] or 0), int(m["t"] or 0), m["hi"], m["lo"]
+                .sortWithinPartitions(id_col),
+                out, "doclens", id_col, F.sum("dl").alias("total_dl"),
             )
         # blockstats read BACK the just-written parquet instead of
         # recomputing the join pipeline (review r13); postings already
@@ -476,59 +432,6 @@ class PostingsIndex(GenerationalStore):
             id_col,
             block_width,
             n_files,
-        )
-        if impact:
-            PostingsIndex._dump_corpus_json(
-                out,
-                sum(c for _, _, c, _ in offs_rows),
-                sum(d * c for _, d, c, _ in offs_rows),
-                id_hi,
-                id_lo,
-            )
-
-    @staticmethod
-    def _dump_corpus_json(out, n_docs, total_dl, id_hi, id_lo=None) -> None:
-        """The per-store stats sidecar: (n_docs, total_dl) are BM25's
-        corpus constants — index metadata summed at read time instead
-        of a per-query doclens aggregation — and [id_lo, id_hi] is the
-        store's doc-id span: id_hi alone is the _land_segment
-        append-only watermark, the pair is the r16 interval-pruning
-        hint (genstore._live_id_intervals). Omitted when unknown;
-        readers then fall back to the disjointness scan."""
-        import json
-
-        st = {"n_docs": int(n_docs), "total_dl": int(total_dl)}
-        if id_hi is not None:
-            st["id_hi"] = int(id_hi)
-        if id_lo is not None:
-            st["id_lo"] = int(id_lo)
-        with open(os.path.join(out, "_corpus.json"), "w") as f:
-            json.dump(st, f)
-
-    @staticmethod
-    def _write_corpus_stats(doclens: DataFrame, out: str, id_col=None) -> None:
-        """Aggregate-and-persist form of _dump_corpus_json, for
-        callers holding a finished doclens store (compaction). With
-        `id_col` the store's max id rides the same tiny aggregation
-        as the watermark."""
-        row = doclens.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("dl").alias("t"),
-            *(
-                (
-                    F.max(F.col(id_col)).alias("hi"),
-                    F.min(F.col(id_col)).alias("lo"),
-                )
-                if id_col
-                else ()
-            ),
-        ).first()
-        PostingsIndex._dump_corpus_json(
-            out,
-            int(row["n"] or 0),
-            int(row["t"] or 0),
-            row["hi"] if id_col else None,
-            row["lo"] if id_col else None,
         )
 
     @staticmethod
@@ -763,63 +666,18 @@ class PostingsIndex(GenerationalStore):
             df = df.join(F.broadcast(dead), id_col, "left_anti")
         return df.select(id_col)
 
-    def _live_count_hint(self, gen: str) -> int | None:
-        """Σ `_corpus.json` n_docs over base + segments — sidecar
-        metadata only, no Spark job (r15: lets the empty-bootstrap
-        ingest skip the disjointness scan). None when any store lacks
-        the sidecar (legacy layout — stay conservative)."""
-        import json
-
-        total = 0
-        for d in [gen] + self._segment_dirs(gen):
-            try:
-                with open(os.path.join(d, "_corpus.json")) as f:
-                    total += int(json.load(f)["n_docs"])
-            except (OSError, ValueError, KeyError):
-                return None
-        return total
-
-    def _live_id_hi_hint(self, gen: str) -> int | None:
-        """Max `_corpus.json` id_hi over base + segments — the
-        append-only watermark _land_segment's fast path checks
-        (sidecar metadata only, no Spark job; r15 optimization).
-        Empty stores (n_docs == 0) contribute nothing; a non-empty
-        store without the key (pre-watermark layout) makes the
-        answer unknown — stay conservative and scan."""
-        import json
-
-        hi = None
-        for d in [gen] + self._segment_dirs(gen):
-            try:
-                with open(os.path.join(d, "_corpus.json")) as f:
-                    st = json.load(f)
-                if int(st["n_docs"]) == 0:
-                    continue
-                h = int(st["id_hi"])
-            except (OSError, ValueError, KeyError, TypeError):
-                return None
-            hi = h if hi is None else max(hi, h)
-        return hi
-
     def _impact_blk_base(self, gen: str) -> int:
         """First free block id for a NEW segment on an impact-blocked
         index: Σ over existing stores of their worst-case block span
         (n_docs // _BLOCK_DOCS + 1 — a store's local blk ids live in
-        [blk_base, blk_base + span)). Reads the same _corpus.json
-        sidecars corpus_stats does; a store missing one contributes 0
-        (cannot happen on impact-blocked generations, which always
-        carry corpus metadata)."""
-        import json
-
-        base = 0
-        for d in [gen] + self._segment_dirs(gen):
-            try:
-                with open(os.path.join(d, "_corpus.json")) as f:
-                    n = int(json.load(f)["n_docs"])
-            except (OSError, ValueError, KeyError):
-                n = 0
-            base += n // self._BLOCK_DOCS + 1
-        return base
+        [blk_base, blk_base + span)). A store missing its sidecar
+        counts as 0 docs (cannot happen on impact-blocked
+        generations)."""
+        return sum(
+            (self._read_stats(d) or {}).get("n_docs", 0) // self._BLOCK_DOCS
+            + 1
+            for d in [gen] + self._segment_dirs(gen)
+        )
 
     def _compact_once(self, n_files: int = 16) -> int:
         gen = self._gen()  # one consistent view across all three stores
@@ -853,6 +711,16 @@ class PostingsIndex(GenerationalStore):
                     "doclens", segs=segs, dead=dead, gen=gen
                 ).drop("blk")
             ).localCheckpoint(eager=True)
+        # Read-backs of the folded stores pass the schemas just
+        # written (no footer-inference job); the doclens write records
+        # the sidecar, so the fold runs no read-back aggregation.
+        schemas = {}
+
+        def _read_back(store):
+            return self.spark.read.schema(schemas[store]).parquet(
+                os.path.join(out, store)
+            )
+
         try:
             for store, sort_cols in (
                 ("doclens", [id_col]),
@@ -880,28 +748,31 @@ class PostingsIndex(GenerationalStore):
                     merged = self._with_impact_blk(merged, id_col, offs)
                 if impact and store == "postings":
                     merged = merged.join(
-                        self.spark.read.parquet(
-                            os.path.join(out, "doclens")
-                        ).select(id_col, "blk"),
+                        _read_back("doclens").select(id_col, "blk"),
                         id_col,
                     ).select("word", id_col, "tf", "dl", "blk")
+                schemas[store] = merged.schema
                 if store == "doclens":
-                    merged = merged.repartitionByRange(
-                        max(1, n_files // 4), "blk" if impact else id_col
-                    ).sortWithinPartitions(
-                        *(("blk", id_col) if impact else (id_col,))
+                    stats = self._write_observed(
+                        merged.repartitionByRange(
+                            max(1, n_files // 4), "blk" if impact else id_col
+                        ).sortWithinPartitions(
+                            *(("blk", id_col) if impact else (id_col,))
+                        ),
+                        out, store, id_col, F.sum("dl").alias("total_dl"),
                     )
-                elif sort_cols:
-                    merged = merged.repartitionByRange(
-                        n_files, "word"
-                    ).sortWithinPartitions(
+                    continue
+                writer = (
+                    merged.repartitionByRange(n_files, "word")
+                    .sortWithinPartitions(
                         *(
                             ["word", "blk", id_col]
                             if impact and store == "postings"
                             else sort_cols
                         )
                     )
-                writer = merged.write.mode("errorifexists")
+                    .write.mode("errorifexists")
+                )
                 if store == "postings":
                     # keep the small row groups build() declares
                     # load-bearing for block-max doc-id pruning
@@ -917,36 +788,24 @@ class PostingsIndex(GenerationalStore):
             # generation's bounds and df_blk sums are exact again.
             # The build-time width is frozen — id growth just mints
             # higher block ids; a LEGACY meta without a width gets a
-            # fresh one derived from the merged doclens (review r13:
-            # defaulting to width=1 minted a posting-sized stats store
-            # forever).
+            # fresh one derived from the merged doclens' recorded stats
+            # (review r13: defaulting to width=1 minted a
+            # posting-sized stats store forever).
             if block_width is None:
-                dl_read = self.spark.read.parquet(
-                    os.path.join(out, "doclens")
-                )
-                row = dl_read.agg(
-                    F.max(F.col(id_col)).alias("hi"),
-                    F.count(F.lit(1)).alias("n"),
-                ).first()
                 block_width = max(
                     1,
-                    (int(row["hi"] or 0) + 1)
+                    ((stats["id_hi"] or 0) + 1)
                     * PostingsIndex._BLOCK_DOCS
-                    // max(1, int(row["n"] or 0)),
+                    // max(1, stats["n_docs"]),
                 )
             block_width = int(block_width)
             self._write_blockstats(
-                self.spark.read.parquet(os.path.join(out, "postings")),
-                self.spark.read.parquet(os.path.join(out, "doclens")),
+                _read_back("postings"),
+                _read_back("doclens"),
                 out,
                 id_col,
                 block_width,
                 n_files,
-            )
-            self._write_corpus_stats(
-                self.spark.read.parquet(os.path.join(out, "doclens")),
-                out,
-                id_col=id_col,
             )
             self._write_meta(
                 out, id_col, meta["text_col"], block_width, impact=impact
@@ -987,24 +846,18 @@ class PostingsIndex(GenerationalStore):
     def corpus_stats(
         self, gen: str | None = None, segs: list[str] | None = None
     ) -> tuple[int, int] | None:
-        """(n_docs, total_dl) summed from the base + segment metadata
-        (_corpus.json) — exact while tombstone-free. None when any
-        store predates the metadata (legacy generation): callers fall
-        back to aggregating doclens. `segs` pins an explicit segment
-        snapshot (see _union_store)."""
-        import json
-
-        gen = gen or self._gen()
-        total_n = total_dl = 0
-        for d in [gen] + (self._segment_dirs(gen) if segs is None else segs):
-            try:
-                with open(os.path.join(d, "_corpus.json")) as f:
-                    st = json.load(f)
-                total_n += int(st["n_docs"])
-                total_dl += int(st["total_dl"])
-            except (OSError, ValueError, KeyError):
-                return None
-        return total_n, total_dl
+        """(n_docs, total_dl) summed from the base + segment
+        sidecars — exact while tombstone-free. None when any store
+        predates them (legacy generation): callers fall back to
+        aggregating doclens. `segs` pins an explicit segment snapshot
+        (see _union_store)."""
+        st = self._store_stats(gen or self._gen(), segs, need=("total_dl",))
+        if st is None:
+            return None
+        return (
+            sum(s["n_docs"] for _, s in st),
+            sum(s.get("total_dl", 0) for _, s in st),
+        )
 
     def block_width(self) -> int:
         return int(self._meta().get("block_width", 1))

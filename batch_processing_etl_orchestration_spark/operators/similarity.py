@@ -635,9 +635,6 @@ class IvfIndex(GenerationalStore):
         c_vec: str,
         n_assign: int,
         check_empty: bool = False,
-        n_rows: int | None = None,
-        id_hi: int | None = None,
-        id_lo: int | None = None,
     ) -> None:
         # check_empty only on the build() path (review r15): segment
         # landings are guaranteed non-empty by _land_segment's bounds
@@ -671,57 +668,26 @@ class IvfIndex(GenerationalStore):
             fields = [candidates.schema[c_id]] + [
                 f for f in candidates.schema.fields if f.name != c_id
             ] + [T.StructField("cell_id", T.IntegerType())]
-            (
-                empty_df(candidates.sparkSession, T.StructType(fields))
-                .write.mode("errorifexists")
-                .parquet(os.path.join(out_dir, "inverted"))
+            IvfIndex._write_observed(
+                empty_df(candidates.sparkSession, T.StructType(fields)),
+                out_dir, "inverted", c_id,
             )
-            IvfIndex._write_row_count(out_dir, 0)
             return
         cells = _nearest_cells(
             candidates, c_id, c_vec, centroids, n_assign
         ).select(c_id, "cell_id")
-        joined = candidates.join(cells, c_id)
-        (
-            joined
-            # range-cluster on (cell, id) from birth: files stay
-            # cell-local for partition pruning and ids are sorted
-            # within each file, so the add-segment disjointness
-            # range-prune has tight row-group stats (review r14)
+        # range-cluster on (cell, id) from birth: files stay cell-local
+        # for partition pruning and ids are sorted within each file, so
+        # the add-segment disjointness range-prune has tight row-group
+        # stats (review r14). The sidecar's n_docs counts inverted
+        # rows (n_assign per id): an upper bound on live ids, zero
+        # exactly when the store is empty — all its readers need.
+        IvfIndex._write_observed(
+            candidates.join(cells, c_id)
             .repartitionByRange(8, "cell_id", c_id)
-            .sortWithinPartitions("cell_id", c_id)
-            .write.mode("errorifexists")
-            .partitionBy("cell_id")
-            .parquet(os.path.join(out_dir, "inverted"))
+            .sortWithinPartitions("cell_id", c_id),
+            out_dir, "inverted", c_id, partition_by="cell_id",
         )
-        if n_rows is not None:
-            # distinct-id count + id-span sidecar (r15/r16): segment
-            # landings know all three from the bounds job for free;
-            # the count lets _land_segment skip the disjointness scan
-            # on an all-zero (bootstrap) index, the max id is the
-            # append-only watermark, and the [id_lo, id_hi] pair is
-            # the interval-pruning hint (genstore._live_id_intervals)
-            IvfIndex._write_row_count(
-                out_dir, n_rows, id_hi=id_hi, id_lo=id_lo
-            )
-
-    @staticmethod
-    def _write_row_count(
-        out_dir: str,
-        n: int,
-        id_hi: int | None = None,
-        id_lo: int | None = None,
-    ) -> None:
-        import json
-
-        os.makedirs(out_dir, exist_ok=True)
-        st = {"n_docs": int(n)}
-        if id_hi is not None:
-            st["id_hi"] = int(id_hi)
-        if id_lo is not None:
-            st["id_lo"] = int(id_lo)
-        with open(os.path.join(out_dir, "_corpus.json"), "w") as f:
-            json.dump(st, f)
 
     @staticmethod
     def _write_centroids(spark, gen_dir: str, centroids) -> None:
@@ -876,9 +842,6 @@ class IvfIndex(GenerationalStore):
             self._write_inverted(
                 new_candidates, tmp, self._centroids(gen0),
                 id_col, vec_col, n_assign,
-                n_rows=int(bounds["n_ids"]),
-                id_hi=bounds["hi"],
-                id_lo=bounds["lo"],
             )
 
         self._land_segment(
@@ -946,45 +909,6 @@ class IvfIndex(GenerationalStore):
             df = df.join(F.broadcast(dead), id_col, "left_anti")
         return df.select(id_col).distinct()
 
-    def _live_count_hint(self, gen: str) -> int | None:
-        """Σ `_corpus.json` distinct-id counts over base + segments —
-        sidecar metadata only (r15: lets the empty-bootstrap ingest
-        skip the disjointness scan). None when any store predates the
-        sidecar (stay conservative)."""
-        import json
-
-        total = 0
-        for d in [gen] + self._segment_dirs(gen):
-            try:
-                with open(os.path.join(d, "_corpus.json")) as f:
-                    total += int(json.load(f)["n_docs"])
-            except (OSError, ValueError, KeyError):
-                return None
-        return total
-
-    def _live_id_hi_hint(self, gen: str) -> int | None:
-        """Max `_corpus.json` id_hi over base + segments — the
-        append-only watermark _land_segment's fast path checks
-        (sidecar metadata only, no Spark job; r15 optimization).
-        Empty stores contribute nothing; a non-empty store without
-        the key (pre-watermark layout, or a compacted base — the
-        fold does not re-count) makes the answer unknown: stay
-        conservative and scan."""
-        import json
-
-        hi = None
-        for d in [gen] + self._segment_dirs(gen):
-            try:
-                with open(os.path.join(d, "_corpus.json")) as f:
-                    st = json.load(f)
-                if int(st["n_docs"]) == 0:
-                    continue
-                h = int(st["id_hi"])
-            except (OSError, ValueError, KeyError, TypeError):
-                return None
-            hi = h if hi is None else max(hi, h)
-        return hi
-
     def _compact_once(self, n_files: int = 16) -> int:
         import uuid as _uuid
 
@@ -1014,25 +938,22 @@ class IvfIndex(GenerationalStore):
                 # schema-bearing NON-partitioned empty store instead
                 # (cell_id as a data column reads/unions/filters
                 # identically to a discovered partition column).
-                (
-                    merged.coalesce(1)
-                    .write.mode("errorifexists")
-                    .parquet(os.path.join(out, "inverted"))
-                )
-                self._write_row_count(out, 0)
+                merged, part = merged.coalesce(1), None
             else:
                 # range-cluster on (cell_id, id): files stay
                 # cell-local for partition pruning AND a big cell
                 # splits across ~n_files tasks instead of one giant
                 # file; the id sort gives the add-segment
                 # disjointness scan tight row-group stats
-                (
+                merged, part = (
                     merged.repartitionByRange(n_files, "cell_id", id_col)
                     .sortWithinPartitions("cell_id", id_col)
-                    .write.mode("errorifexists")
-                    .partitionBy("cell_id")
-                    .parquet(os.path.join(out, "inverted"))
-                )
+                ), "cell_id"
+            # the folded base records its sidecar like a landing, so
+            # the next landing keeps its watermark and interval pruning
+            self._write_observed(
+                merged, out, "inverted", id_col, partition_by=part
+            )
             # centroids are generation metadata: carried forward
             # verbatim (compaction never retrains — that is build's
             # job, explicitly)

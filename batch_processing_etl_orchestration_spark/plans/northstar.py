@@ -1412,8 +1412,9 @@ def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the chain graphs capped LSH buckets emit for over-cap duplicate
     clusters; each round is two key-partitioned joins on the compact
     (long, long) edge list with localCheckpoint lineage truncation.
-    The driver-side loop only inspects a monotone scalar (sum of
-    labels), never the data. The oracle is a DuckDB recursive CTE
+    The driver-side loop never inspects the data: an Observation on
+    each round's checkpoint counts the labels that dropped, and the
+    loop stops at zero. The oracle is a DuckDB recursive CTE
     over the same edge set — a genuinely iterative operator that
     still hash-checks.
     """

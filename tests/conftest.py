@@ -33,3 +33,20 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """Callable running fn() and returning (result, jobs it ran).
+    Counts from the scheduler's job-id counter, not the status store's
+    job list, which keeps only spark.ui.retainedJobs entries and so
+    stops growing in a long session. Job counts do not depend on the
+    host."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+
+    def run(fn):
+        before = dag.numTotalJobs()
+        out = fn()
+        return out, dag.numTotalJobs() - before
+
+    return run

@@ -291,6 +291,37 @@ def test_connected_components_chain_graph_converges_fast(spark):
     assert all(c == 1000 for i, c in got if i >= 1000)
 
 
+def test_connected_components_empty_pairs(spark):
+    """No pairs: an empty label frame after one round, no hang."""
+    from batch_processing_etl_orchestration_spark.operators.dedup import (
+        connected_components,
+    )
+
+    empty = spark.createDataFrame([], "doc_a LONG, doc_b LONG")
+    assert connected_components(empty).collect() == []
+
+
+def test_connected_components_one_action_per_round(spark, count_jobs):
+    """The convergence test rides each round's checkpoint as an
+    observed count of dropped labels, so a graph whose seed labels
+    are already final stops after round 0. Upper bound on the jobs
+    of a 5-pair graph, collect included."""
+    from batch_processing_etl_orchestration_spark.operators.dedup import (
+        connected_components,
+    )
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (3, 4), (5, 6), (7, 8), (9, 10)], "doc_a LONG, doc_b LONG"
+    )
+    rows, n_jobs = count_jobs(
+        lambda: connected_components(pairs).collect()
+    )
+    assert sorted(tuple(r) for r in rows) == [
+        (i, i - (i + 1) % 2) for i in range(1, 11)
+    ]
+    assert n_jobs <= 10, n_jobs
+
+
 def test_bloom_decontaminate_empty_eval(spark):
     """An empty eval set must yield an empty result from both the
     exact and bloom paths (no spurious bloom hits from an empty

@@ -378,6 +378,44 @@ def test_ivf_lifecycle_segments_tombstones_compact(spark, tmp_path):
     }
 
 
+def test_ivf_landing_after_fold_prunes(spark, tmp_path, monkeypatch):
+    """A folded IvfIndex generation records its store-stats sidecar
+    like a landing does, so the first append-only landing after
+    compact_segments still proves disjointness from the id watermark
+    and never scans the live ids."""
+    from batch_processing_etl_orchestration_spark.operators.similarity import (
+        IvfIndex,
+    )
+
+    _, c = _qc(spark)
+    idx = IvfIndex.build(
+        spark, c.where(F.col("cand_id") < 300), str(tmp_path / "ivf_wm"),
+        n_cells=4, dim=64,
+    )
+    idx.add_segment(
+        c.where((F.col("cand_id") >= 300) & (F.col("cand_id") < 350)), "s1"
+    )
+    assert idx.compact_segments() == 1
+    folded_hi = c.where(F.col("cand_id") < 350).agg(F.max("cand_id")).first()[0]
+    st = idx._read_stats(idx._gen())
+    assert st["id_hi"] == folded_hi and st["id_lo"] == 0 and st["n_docs"] > 0
+    assert idx._live_id_hi_hint(idx._gen()) == folded_hi
+
+    calls = []
+    orig = IvfIndex._live_ids
+
+    def spy(self, gen, dirs=None):
+        calls.append(dirs)
+        return orig(self, gen, dirs=dirs)
+
+    monkeypatch.setattr(IvfIndex, "_live_ids", spy)
+    idx.add_segment(
+        c.where((F.col("cand_id") >= 350) & (F.col("cand_id") < 380)), "s2"
+    )
+    assert calls == []
+    assert len(idx._segment_dirs()) == 1
+
+
 def test_ivf_probe_pinned_against_midprobe_publish(
     spark, tmp_path, monkeypatch
 ):
