@@ -15,23 +15,27 @@ of warehouse.snapshots.VersionedTable._commit.
 Layout: current -> gen-<hex>/{<stores...>, _corpus.json,
 segments/<name>/{<stores...>, _corpus.json}, tombstones/t-<hex>/}.
 
-The base class owns the store-stats sidecar ``_corpus.json`` beside
-the base and every segment: ``n_docs`` (rows of the id-keyed store),
-``id_lo`` and ``id_hi`` (its id span), plus any extra aggregate a
-subclass asks for (PostingsIndex's ``total_dl``). Builds, landings
-and compactions write their id-keyed store through _write_observed,
-which records the sidecar from the store write's own job.
+The base class owns each store's physical layout (_LAYOUTS: range-
+cluster columns, in-file sort, file count, parquet options, partition
+column) and the store-stats sidecar ``_corpus.json`` beside the base
+and every segment: ``n_docs`` (rows of the id-keyed store), ``id_lo``
+and ``id_hi`` (its id span), plus any extra aggregate a subclass asks
+for (PostingsIndex's ``total_dl``). Builds, landings and folds write
+every store through _write_store, which applies the layout and, for
+the id-keyed store, records the sidecar from the write's own job.
 _write_stats is the sidecar's one writer, _read_stats its one parser.
 
 Subclass contract:
   _STORES        every base-generation store dir (exists() checks all)
   _CORE_STORES   the stores a SEGMENT must carry to be servable
+  _ID_STORE      the id-keyed store _live_ids reads (add-segment
+                 id-disjointness); _ID_STORE_UNIQUE False when it
+                 holds an id more than once
   _META_DEFAULT  meta dict served for generations without _meta.json
-  _live_ids(gen) one-column DataFrame of ids currently live (for
-                 add-segment id-disjointness)
-  _compact_once(n_files)  the store-specific fold, built on the
-                 manifest/publish/rescue helpers here; it writes its
-                 id-keyed store through _write_observed like a landing
+  _fold_stores(out, gen, segs, dead, n_files)  writes the folded
+                 stores and _meta.json into `out`. compact_segments
+                 owns the rest of the fold: snapshot, fresh gen-* dir,
+                 cleanup on failure, folded manifest, publish, rescue
 
 The concurrency protocol (lost-update chase, retract-on-tombstone,
 fold-retry gated to vanished files, post-publish rescue) was built and
@@ -43,6 +47,7 @@ implementation.
 
 from __future__ import annotations
 
+import dataclasses
 import os
 import uuid
 
@@ -52,6 +57,57 @@ from pyspark.sql import functions as F
 # The store-stats sidecar (module docstring); the historical name keeps
 # sidecars already on disk readable.
 _STATS_FILE = "_corpus.json"
+
+
+@dataclasses.dataclass(frozen=True)
+class _Layout:
+    """How one store is written: range-clustered on `cluster` into
+    max(1, n_files // files_div) files, each sorted on `sort`. `_ID`
+    in either stands for the index's id column. `observed` stores
+    record the sidecar (GenerationalStore._write_store)."""
+
+    cluster: tuple
+    sort: tuple
+    files_div: int = 1
+    block_size: int | None = None
+    partition_by: str | None = None
+    observed: bool = False
+
+
+_ID = "<id>"
+
+# Every store of both indexes, written by build, landing and fold alike.
+_LAYOUTS = {
+    # PostingsIndex: word-clustered, so a term scan prunes to ~1 file.
+    "positions": _Layout(("word",), ("word", _ID, "pos")),
+    # SMALL row groups (2 MB vs the 128 MB default): a range-clustered
+    # file is often one giant row group, which makes the footer-stats
+    # id pruning block-max serving relies on a no-op. A hot term then
+    # spans many row groups with narrow id windows each.
+    "postings": _Layout(
+        ("word",), ("word", _ID), block_size=2 * 1024 * 1024
+    ),
+    # id-clustered so doc-id range predicates reach the footers
+    "doclens": _Layout((_ID,), (_ID,), files_div=4, observed=True),
+    "blockstats": _Layout(("word",), ("word", "blk"), files_div=2),
+    # IvfIndex: cell-local files for partition pruning, ids sorted
+    # within each file so the disjointness range-prune has tight
+    # row-group stats.
+    "inverted": _Layout(
+        ("cell_id", _ID), ("cell_id", _ID),
+        partition_by="cell_id", observed=True,
+    ),
+}
+# An impact-blocked PostingsIndex's stores carry `blk`, and serving's
+# range predicates push down on it instead of the id.
+_IMPACT_LAYOUTS = {
+    "postings": dataclasses.replace(
+        _LAYOUTS["postings"], sort=("word", "blk", _ID)
+    ),
+    "doclens": dataclasses.replace(
+        _LAYOUTS["doclens"], cluster=("blk",), sort=("blk", _ID)
+    ),
+}
 
 # Sentinel distinguishing "caller did not pin tombstones — re-list the
 # generation's dirs" (_UNSET) from "caller holds a snapshot in which no
@@ -163,6 +219,8 @@ class GenerationalStore:
 
     _STORES: tuple[str, ...] = ()
     _CORE_STORES: tuple[str, ...] = ()
+    _ID_STORE: str = ""
+    _ID_STORE_UNIQUE: bool = True
     _META_DEFAULT: dict = {}
     # Stores written FLAT (plain parquet files, never partitionBy) in
     # every generation AND segment: safe — and much cheaper — to read
@@ -577,30 +635,57 @@ class GenerationalStore:
     # -- store-stats sidecar -------------------------------------------
 
     @staticmethod
-    def _write_observed(
-        df: DataFrame, out: str, store: str, id_col: str, *extra,
-        partition_by: str | None = None,
-    ) -> dict:
-        """Write `df` as the id-keyed store `out/store` and record the
-        sidecar from the same job: an Observation counts the rows and
-        takes the min and max of `id_col`, plus any `extra` aliased
-        aggregates. Returns the recorded stats.
+    def _write_store(
+        df: DataFrame, out: str, store: str, n_files: int, id_col: str,
+        *extra, empty: bool = False,
+    ) -> dict | None:
+        """Write `df` as `out/store` in the store's layout (_LAYOUTS;
+        _IMPACT_LAYOUTS when `df` carries `blk`). An observed store
+        also records the sidecar from the same job: an Observation
+        counts the rows and takes the min and max of `id_col`, plus
+        any `extra` aliased aggregates. Returns the recorded stats, or
+        None for an unobserved store.
 
-        `df` arrives already range-partitioned and sorted, so the
-        observe sits ABOVE the repartition: range partitioning runs a
-        sampling pass over its child, and a metrics node below it
-        fires once per pass (the count comes out doubled)."""
-        obs = Observation()
-        writer = df.observe(
-            obs,
-            F.count(F.lit(1)).alias("n_docs"),
-            F.min(F.col(id_col)).alias("id_lo"),
-            F.max(F.col(id_col)).alias("id_hi"),
-            *extra,
-        ).write.mode("errorifexists")
-        if partition_by is not None:
-            writer = writer.partitionBy(partition_by)
+        The observe sits ABOVE the repartition: range partitioning
+        runs a sampling pass over its child, and a metrics node below
+        it fires once per pass (the count comes out doubled).
+
+        `empty` marks a frame known to hold no rows. It is written as
+        one unpartitioned file instead: a partitionBy write of zero
+        rows lands a _SUCCESS-only dir that fails schema inference on
+        every later read, and a data column reads, unions and filters
+        like a discovered partition column."""
+        lay = (
+            _IMPACT_LAYOUTS.get(store) if "blk" in df.columns else None
+        ) or _LAYOUTS[store]
+
+        def cols(names):
+            return [id_col if c == _ID else c for c in names]
+
+        if empty:
+            df, part = df.coalesce(1), None
+        else:
+            df = df.repartitionByRange(
+                max(1, n_files // lay.files_div), *cols(lay.cluster)
+            ).sortWithinPartitions(*cols(lay.sort))
+            part = lay.partition_by
+        obs = Observation() if lay.observed else None
+        if obs is not None:
+            df = df.observe(
+                obs,
+                F.count(F.lit(1)).alias("n_docs"),
+                F.min(F.col(id_col)).alias("id_lo"),
+                F.max(F.col(id_col)).alias("id_hi"),
+                *extra,
+            )
+        writer = df.write.mode("errorifexists")
+        if lay.block_size is not None:
+            writer = writer.option("parquet.block.size", str(lay.block_size))
+        if part is not None:
+            writer = writer.partitionBy(part)
         writer.parquet(os.path.join(out, store))
+        if obs is None:
+            return None
         stats = obs.get
         GenerationalStore._write_stats(out, stats)
         return stats
@@ -731,22 +816,48 @@ class GenerationalStore:
         # re-listing here would leak a mid-plan delete into the scan
         # while derived statistics still count the deleted rows).
         gen = gen or self._gen()
-        dirs = [os.path.join(gen, store)] + [
-            os.path.join(seg, store)
-            for seg in (self._segment_dirs(gen) if segs is None else segs)
-        ]
-        if store in self._FLAT_STORES:
-            df = self._read_flat_store(store, dirs)
-        else:
-            df = self._read_store_dir(dirs[0])
-            for d in dirs[1:]:
-                df = df.unionByName(self._read_store_dir(d))
+        df = self._read_store(
+            store,
+            [gen] + (self._segment_dirs(gen) if segs is None else segs),
+        )
         if dead is _UNSET:
             dead = self._tombstones(gen)
         if dead is not None:
             key = self._meta(gen)["id_col"]
             cols = df.columns  # the anti-join fronts the key; keep order
             df = df.join(F.broadcast(dead), key, "left_anti").select(*cols)
+        return df
+
+    def _live_ids(self, gen: str, dirs: list[str] | None = None) -> DataFrame:
+        """One row per id currently served from the id-keyed store —
+        the add-segment disjointness view, range-prunable on that
+        store's id clustering. `dirs` restricts the scan to the given
+        base/segment dirs (the sidecar interval-pruned set); the
+        tombstone anti-join applies either way, so a tombstoned id
+        reports as tombstoned downstream, never as a live conflict. A
+        store holding ids more than once (IvfIndex's inverted lists:
+        n_assign rows per id) is de-duplicated, or the conflict count
+        would overstate by the replication factor."""
+        id_col = self._meta(gen)["id_col"]
+        df = self._read_store(
+            self._ID_STORE,
+            [gen] + self._segment_dirs(gen) if dirs is None else dirs,
+        )
+        dead = self._tombstones(gen)
+        if dead is not None:
+            df = df.join(F.broadcast(dead), id_col, "left_anti")
+        df = df.select(id_col)
+        return df if self._ID_STORE_UNIQUE else df.distinct()
+
+    def _read_store(self, store: str, dirs: list[str]) -> DataFrame:
+        """`store` under each of `dirs` (a generation and/or its
+        segments), as one frame."""
+        paths = [os.path.join(d, store) for d in dirs]
+        if store in self._FLAT_STORES:
+            return self._read_flat_store(store, paths)
+        df = self._read_store_dir(paths[0])
+        for p in paths[1:]:
+            df = df.unionByName(self._read_store_dir(p))
         return df
 
     def _read_flat_store(self, store: str, dirs: list[str]):
@@ -816,6 +927,44 @@ class GenerationalStore:
                 return self._compact_once(n_files)
             except Exception as second:
                 raise second from first
+
+    def _compact_once(self, n_files: int) -> int:
+        gen = self._gen()  # one consistent view across every store
+        segs = self._segment_dirs(gen)
+        tomb_dirs = self._tombstone_dirs(gen)
+        dead = (
+            self.spark.read.parquet(*tomb_dirs).distinct()
+            if tomb_dirs
+            else None
+        )
+        if not segs and dead is None:
+            return 0
+        gen_name = f"gen-{uuid.uuid4().hex[:12]}"
+        out = os.path.join(self.path, gen_name)
+        try:
+            self._fold_stores(out, gen, segs, dead, n_files)
+            self._write_folded_manifest(out, gen, segs, tomb_dirs)
+        except Exception:
+            # Never publish a torn generation; reclaim the partial dir.
+            # The cleanup covers EVERYTHING up to (but not including)
+            # _publish — a failure in _write_meta or the _FOLDED
+            # journal write must not leak an unpublished gen-* dir to
+            # the 600s age-based reap. A concurrent retract
+            # renaming a snapshotted segment away mid-read lands here
+            # too — compact_segments retries that class once.
+            import shutil
+
+            shutil.rmtree(out, ignore_errors=True)
+            raise
+        self._publish_and_rescue(gen, gen_name, out, segs, tomb_dirs)
+        return len(segs)
+
+    def _fold_stores(
+        self, out: str, gen: str, segs: list[str], dead, n_files: int
+    ) -> None:
+        """Write base + `segs` − `dead` of `gen` as the stores and
+        _meta.json of the new generation `out` (subclass hook)."""
+        raise NotImplementedError
 
     # Segment fan-out threshold for maybe_compact — measured at sf10
     # (500k docs, SCALE.md §segment fan-out): warm BM25 serving costs

@@ -38,7 +38,7 @@ import math
 import os
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 # The generation-pointer machinery (publish/chase/segments/tombstones/
@@ -103,6 +103,7 @@ class PostingsIndex(GenerationalStore):
     # (blockmax falls back via corpus_stats=None) and the next
     # compaction rebuilds them in the current format.
     _CORE_STORES = ("postings", "doclens", "positions")
+    _ID_STORE = "doclens"
 
     # Build-time doc-id blocking for block-max pruning (VERDICT r12
     # #2): block = doc_id // block_width, width chosen at build time so
@@ -169,18 +170,33 @@ class PostingsIndex(GenerationalStore):
         because repetition is what BM25 rewards most (a doc's best
         term score is monotone in tf and saturates; measured on the
         fixture: the top-15 docs all carry tf 3–9 while dl spans the
-        whole 10–99 range), dl breaks ties the right way. The window
-        runs over the AGGREGATED histogram ((maxtf, dl) domain —
-        metadata-sized, never corpus-sized), so the single-partition
-        sort is bounded."""
-        hist = docstats.groupBy("maxtf", "dl").agg(
-            F.count(F.lit(1)).alias("cnt")
+        whole 10–99 range), dl breaks ties the right way. The
+        histogram is (maxtf, dl)-domain sized, never corpus-sized, so
+        it is collected ONCE and the offsets are summed with exact
+        integer arithmetic on the driver."""
+        from batch_processing_etl_orchestration_spark.tables import (
+            local_rows_df,
         )
-        w = Window.orderBy(F.desc("maxtf"), F.asc("dl")).rowsBetween(
-            Window.unboundedPreceding, -1
+
+        hist = (
+            docstats.groupBy("maxtf", "dl")
+            .agg(F.count(F.lit(1)).alias("cnt"))
+            .collect()
         )
-        return hist.withColumn(
-            "off", F.coalesce(F.sum("cnt").over(w), F.lit(0)).cast("long")
+        hist.sort(key=lambda r: (-r["maxtf"], r["dl"]))
+        offs_rows, run = [], 0
+        for r in hist:
+            offs_rows.append(
+                (int(r["maxtf"]), int(r["dl"]), int(r["cnt"]), run)
+            )
+            run += int(r["cnt"])
+        # Arrow LocalRelation, not a Python-RDD literal: the
+        # offsets frame is broadcast into both store writes, and each
+        # broadcast of a list-backed frame re-runs its 32-slice Python
+        # scan (~0.5 s per action on local[32])
+        return local_rows_df(
+            docstats.sparkSession, offs_rows,
+            "maxtf BIGINT, dl BIGINT, cnt BIGINT, off BIGINT",
         )
 
     @staticmethod
@@ -295,13 +311,6 @@ class PostingsIndex(GenerationalStore):
         # dl per posting, and embedding it kills the doclens shuffle
         # join on the read path (at 10⁸ posting rows that join IS the
         # serving cost). +8 bytes/posting at build time, paid once.
-        # SMALL row groups (2 MB vs the 128 MB default): a range-
-        # clustered file is often one giant row group, which makes the
-        # footer-stats doc_id pruning block-max serving relies on a
-        # no-op (measured: the seed scan read entire hot-term files).
-        # A hot term spanning many small row groups gets narrow id
-        # windows per group — that's what the seed/kept range
-        # predicates skip. Term lookups only get finer pruning.
         # ONE tokenize pass per build/ingest (r15 optimization, guide
         # §2.3/§8: never scan the heavy opaque column twice when a
         # lightweight derived table answers the question). The
@@ -309,16 +318,10 @@ class PostingsIndex(GenerationalStore):
         # and the other stores derive from its read-back: tf = rows
         # per (word, doc), dl = Σ tf per doc (every token counted
         # once — identical to size(split)), maxtf = max tf per doc.
-        # The old shape ran the text split three times (tf pass, dl
-        # pass, positions pass) plus two eager checkpoints; the new
-        # one scans raw text once and every derived pass is a
-        # column-pruned scan of the written (word, id[, pos]) parquet.
-        # Impact mode still writes doclens before postings —
-        # (doc_id, dl, maxtf, blk), blk from the (maxtf DESC, dl ASC)
-        # impact ordering — and reads it back for the postings join,
-        # so both stores carry the identical doc→block assignment.
-        # Both stores cluster on blk so the kept/seed BLK ranges (not
-        # doc-id ranges) reach the footers.
+        # Impact mode writes doclens before postings — (doc_id, dl,
+        # maxtf, blk), blk from the (maxtf DESC, dl ASC) impact
+        # ordering — and reads it back for the postings join, so both
+        # stores carry the identical doc→block assignment.
         # Read-backs below pass the WRITTEN frame's schema explicitly
         # (r16 optimization): a bare spark.read.parquet runs a
         # footer-reading schema-inference job per call (~0.1 s fixed
@@ -326,13 +329,7 @@ class PostingsIndex(GenerationalStore):
         # the schema known at write time they cost zero jobs.
         spark = docs.sparkSession
         pos_df = build_positional_postings(docs, id_col, text_col)
-        (
-            pos_df
-            .repartitionByRange(n_files, "word")
-            .sortWithinPartitions("word", id_col, "pos")
-            .write.mode("errorifexists")
-            .parquet(os.path.join(out, "positions"))
-        )
+        PostingsIndex._write_store(pos_df, out, "positions", n_files, id_col)
         tf_tbl = (
             spark.read.schema(pos_df.schema)
             .parquet(os.path.join(out, "positions"))
@@ -343,43 +340,13 @@ class PostingsIndex(GenerationalStore):
             F.sum("tf").cast("long").alias("dl"),
             F.max("tf").cast("long").alias("maxtf"),
         )
+        total_dl = F.sum("dl").alias("total_dl")
         if impact:
-            # The (maxtf, dl) histogram is broadcast-sized by contract
-            # (see _impact_offsets) — collect it ONCE and compute the
-            # exclusive prefix offsets with exact integer arithmetic
-            # on the driver: the offsets frame becomes a literal
-            # (no recompute per reference).
-            hist = (
-                stats.groupBy("maxtf", "dl")
-                .agg(F.count(F.lit(1)).alias("cnt"))
-                .collect()
-            )
-            hist.sort(key=lambda r: (-r["maxtf"], r["dl"]))
-            offs_rows, run = [], 0
-            for r in hist:
-                offs_rows.append(
-                    (int(r["maxtf"]), int(r["dl"]), int(r["cnt"]), run)
-                )
-                run += int(r["cnt"])
-            from batch_processing_etl_orchestration_spark.tables import (
-                local_rows_df,
-            )
-
-            # Arrow LocalRelation, not a Python-RDD literal (r15): the
-            # offsets frame is broadcast into BOTH store writes below,
-            # and each broadcast of a list-backed frame re-runs its
-            # 32-slice Python scan (~0.5 s per action on local[32])
-            offs = local_rows_df(
-                spark, offs_rows, "maxtf BIGINT, dl BIGINT, cnt BIGINT, off BIGINT"
-            )
             dl_df = PostingsIndex._with_impact_blk(
-                stats.select(id_col, "dl", "maxtf"), id_col, offs,
-                blk_base,
-            ).select(id_col, "dl", "maxtf", "blk")
-            PostingsIndex._write_observed(
-                dl_df.repartitionByRange(max(1, n_files // 4), "blk")
-                .sortWithinPartitions("blk", id_col),
-                out, "doclens", id_col, F.sum("dl").alias("total_dl"),
+                stats, id_col, PostingsIndex._impact_offsets(stats), blk_base
+            )
+            PostingsIndex._write_store(
+                dl_df, out, "doclens", n_files, id_col, total_dl
             )
             dls = (
                 spark.read.schema(dl_df.schema)
@@ -392,52 +359,21 @@ class PostingsIndex(GenerationalStore):
             "word", id_col, "tf", "dl",
             *(("blk",) if impact else ()),
         )
-        (
-            post_df
-            .repartitionByRange(n_files, "word")
-            .sortWithinPartitions(
-                *(
-                    ("word", "blk", id_col)
-                    if impact
-                    else ("word", id_col)
-                )
-            )
-            .write.mode("errorifexists")
-            .option("parquet.block.size", str(2 * 1024 * 1024))
-            .parquet(os.path.join(out, "postings"))
-        )
+        PostingsIndex._write_store(post_df, out, "postings", n_files, id_col)
         if not impact:
-            # doclens clustered on the id so doc-id range predicates
-            # reach the parquet footers; the corpus stats ride the
-            # write (genstore._write_observed)
-            PostingsIndex._write_observed(
-                dls.repartitionByRange(max(1, n_files // 4), id_col)
-                .sortWithinPartitions(id_col),
-                out, "doclens", id_col, F.sum("dl").alias("total_dl"),
+            PostingsIndex._write_store(
+                dls, out, "doclens", n_files, id_col, total_dl
             )
-        # blockstats read BACK the just-written parquet instead of
-        # recomputing the join pipeline (review r13); postings already
-        # embed dl (and blk in impact mode). Schemas passed explicitly
-        # — they ARE the just-written frames' schemas (r16: no
-        # inference jobs).
-        dl_schema = dl_df.schema if impact else dls.schema
         PostingsIndex._write_blockstats(
             spark.read.schema(post_df.schema).parquet(
                 os.path.join(out, "postings")
             ),
-            spark.read.schema(dl_schema).parquet(
-                os.path.join(out, "doclens")
-            ),
-            out,
-            id_col,
-            block_width,
-            n_files,
+            out, id_col, block_width, n_files,
         )
 
     @staticmethod
     def _write_blockstats(
         postings: DataFrame,
-        doclens: DataFrame,
         out: str,
         id_col: str,
         block_width: int,
@@ -449,15 +385,16 @@ class PostingsIndex(GenerationalStore):
         increases in tf and decreases in dl — and df_blk counts posting
         rows (Σ over blocks = the term's df while no tombstones exist).
         Row count is Σ_w min(df_w, n_blocks): a compressed summary,
-        never posting-sized for hot terms."""
-        if "dl" not in postings.columns:
-            postings = postings.join(doclens, id_col)
+        never posting-sized for hot terms. `postings` is the read-back
+        of the just-written store (never recompute the join pipeline),
+        which embeds dl (and blk in impact mode), read with the schema
+        it was written with (no inference job)."""
         blk = (
             F.col("blk")  # impact-blocked store: assignment is baked in
             if "blk" in postings.columns
             else F.floor(F.col(id_col) / F.lit(block_width))
         )
-        (
+        PostingsIndex._write_store(
             postings.select(
                 "word",
                 blk.cast("long").alias("blk"),
@@ -469,11 +406,8 @@ class PostingsIndex(GenerationalStore):
                 F.max("tf").cast("long").alias("max_tf"),
                 F.min("dl").cast("long").alias("min_dl"),
                 F.count(F.lit(1)).cast("long").alias("df_blk"),
-            )
-            .repartitionByRange(max(1, n_files // 2), "word")
-            .sortWithinPartitions("word", "blk")
-            .write.mode("errorifexists")
-            .parquet(os.path.join(out, "blockstats"))
+            ),
+            out, "blockstats", n_files, id_col,
         )
 
     @staticmethod
@@ -647,25 +581,6 @@ class PostingsIndex(GenerationalStore):
             docs.select(F.col(id_col)), name, _write, validate=_validate
         )
 
-    def _live_ids(self, gen: str, dirs: list[str] | None = None) -> DataFrame:
-        """Ids currently served (doclens is the per-doc store; reads
-        apply the tombstone anti-join) — the add-segment disjointness
-        view, range-prunable on the id-clustered store. `dirs`
-        restricts the scan to the given store dirs (the sidecar
-        interval-pruned set, r16); the tombstone anti-join is applied
-        either way so a tombstoned id still reports as tombstoned
-        downstream, never as a live conflict."""
-        id_col = self._meta(gen)["id_col"]
-        if dirs is None:
-            return self.doclens(gen).select(id_col)
-        df = self._read_flat_store(
-            "doclens", [os.path.join(d, "doclens") for d in dirs]
-        )
-        dead = self._tombstones(gen)
-        if dead is not None:
-            df = df.join(F.broadcast(dead), id_col, "left_anti")
-        return df.select(id_col)
-
     def _impact_blk_base(self, gen: str) -> int:
         """First free block id for a NEW segment on an impact-blocked
         index: Σ over existing stores of their worst-case block span
@@ -679,152 +594,77 @@ class PostingsIndex(GenerationalStore):
             for d in [gen] + self._segment_dirs(gen)
         )
 
-    def _compact_once(self, n_files: int = 16) -> int:
-        gen = self._gen()  # one consistent view across all three stores
-        segs = self._segment_dirs(gen)
-        tomb_dirs = self._tombstone_dirs(gen)
-        dead = (
-            self.spark.read.parquet(*tomb_dirs).distinct()
-            if tomb_dirs
-            else None
-        )
-        if not segs and dead is None:
-            return 0
+    def _fold_stores(self, out, gen, segs, dead, n_files) -> None:
         meta = self._meta(gen)
         id_col = meta["id_col"]
-        gen_name = f"gen-{uuid.uuid4().hex[:12]}"
-        out = os.path.join(self.path, gen_name)
-        block_width = meta.get("block_width")
         impact = bool(meta.get("impact_blocked"))
-        offs = None
-        if impact:
-            # fresh GLOBAL impact blocking over the folded corpus:
-            # per-store blk ranges (base + offset segments) collapse
-            # back to one dense impact-ordered block space. offs is
-            # histogram-sized; eager-checkpoint it so the store folds
-            # don't re-evaluate the corpus-wide groupBy each (the r13
-            # lazy-reuse lesson). doclens folds FIRST (the loop order
-            # below) and postings read its fresh blk back by id —
-            # same single-assignment discipline as _write_stores.
-            offs = self._impact_offsets(
-                self._union_store(
-                    "doclens", segs=segs, dead=dead, gen=gen
-                ).drop("blk")
-            ).localCheckpoint(eager=True)
-        # Read-backs of the folded stores pass the schemas just
-        # written (no footer-inference job); the doclens write records
-        # the sidecar, so the fold runs no read-back aggregation.
-        schemas = {}
 
-        def _read_back(store):
-            return self.spark.read.schema(schemas[store]).parquet(
+        def union(store):
+            # impact blocking is redone globally over the folded corpus:
+            # per-store blk ranges (base + offset segments) collapse back
+            # to one dense impact-ordered block space
+            return self._union_store(
+                store, segs=segs, dead=dead, gen=gen
+            ).drop("blk")
+
+        def read_back(store, df):
+            return self.spark.read.schema(df.schema).parquet(
                 os.path.join(out, store)
             )
 
-        try:
-            for store, sort_cols in (
-                ("doclens", [id_col]),
-                ("postings", ["word", id_col]),
-                ("positions", ["word", id_col, "pos"]),
-            ):
-                # one segment listing + one tombstone read for all
-                # three stores — also pins a single consistent view
-                merged = self._union_store(
-                    store, segs=segs, dead=dead, gen=gen
-                )
-                if impact and "blk" in merged.columns:
-                    merged = merged.drop("blk")
-                if store == "postings" and "dl" not in merged.columns:
-                    # legacy 3-column postings: denormalize dl during
-                    # the fold so the compacted generation serves the
-                    # current format (review r13)
-                    merged = merged.join(
-                        self._union_store(
-                            "doclens", segs=segs, dead=dead, gen=gen
-                        ).select(id_col, "dl"),
-                        id_col,
-                    ).select("word", id_col, "tf", "dl")
-                if impact and store == "doclens":
-                    merged = self._with_impact_blk(merged, id_col, offs)
-                if impact and store == "postings":
-                    merged = merged.join(
-                        _read_back("doclens").select(id_col, "blk"),
-                        id_col,
-                    ).select("word", id_col, "tf", "dl", "blk")
-                schemas[store] = merged.schema
-                if store == "doclens":
-                    stats = self._write_observed(
-                        merged.repartitionByRange(
-                            max(1, n_files // 4), "blk" if impact else id_col
-                        ).sortWithinPartitions(
-                            *(("blk", id_col) if impact else (id_col,))
-                        ),
-                        out, store, id_col, F.sum("dl").alias("total_dl"),
-                    )
-                    continue
-                writer = (
-                    merged.repartitionByRange(n_files, "word")
-                    .sortWithinPartitions(
-                        *(
-                            ["word", "blk", id_col]
-                            if impact and store == "postings"
-                            else sort_cols
-                        )
-                    )
-                    .write.mode("errorifexists")
-                )
-                if store == "postings":
-                    # keep the small row groups build() declares
-                    # load-bearing for block-max doc-id pruning
-                    # (review r13: a compacted generation silently
-                    # regressed the pruning to a no-op)
-                    writer = writer.option(
-                        "parquet.block.size", str(2 * 1024 * 1024)
-                    )
-                writer.parquet(os.path.join(out, store))
-            # blockstats are rebuilt EXACTLY from the merged stores
-            # (never merged from per-segment stats): the tombstoned
-            # rows are physically gone here, so every compacted
-            # generation's bounds and df_blk sums are exact again.
-            # The build-time width is frozen — id growth just mints
-            # higher block ids; a LEGACY meta without a width gets a
-            # fresh one derived from the merged doclens' recorded stats
-            # (review r13: defaulting to width=1 minted a
-            # posting-sized stats store forever).
-            if block_width is None:
-                block_width = max(
-                    1,
-                    ((stats["id_hi"] or 0) + 1)
-                    * PostingsIndex._BLOCK_DOCS
-                    // max(1, stats["n_docs"]),
-                )
-            block_width = int(block_width)
-            self._write_blockstats(
-                _read_back("postings"),
-                _read_back("doclens"),
-                out,
-                id_col,
-                block_width,
-                n_files,
+        doclens = union("doclens")
+        if impact:
+            doclens = self._with_impact_blk(
+                doclens, id_col, self._impact_offsets(doclens)
             )
-            self._write_meta(
-                out, id_col, meta["text_col"], block_width, impact=impact
+        # the doclens write records the sidecar, so the fold runs no
+        # read-back aggregation
+        stats = self._write_store(
+            doclens, out, "doclens", n_files, id_col,
+            F.sum("dl").alias("total_dl"),
+        )
+        postings = union("postings")
+        if "dl" not in postings.columns:
+            # legacy 3-column postings: denormalize dl during the fold
+            # so the compacted generation serves the current format
+            postings = postings.join(doclens.select(id_col, "dl"), id_col)
+        if impact:
+            # postings take the fresh blk back from doclens by id — the
+            # single-assignment discipline of _write_stores
+            postings = postings.join(
+                read_back("doclens", doclens).select(id_col, "blk"), id_col
             )
-            self._write_folded_manifest(out, gen, segs, tomb_dirs)
-        except Exception:
-            # Never publish a torn generation; reclaim the partial dir.
-            # The cleanup covers EVERYTHING up to (but not including)
-            # _publish — a failure in _write_meta or the _FOLDED
-            # journal write must not leak an unpublished gen-* dir to
-            # the 600s age-based reap (ADVICE r9). A concurrent retract
-            # renaming a snapshotted segment away mid-read lands here
-            # too — compact_segments retries that class once.
-            import shutil
-
-            shutil.rmtree(out, ignore_errors=True)
-            raise
-        self._publish_and_rescue(gen, gen_name, out, segs, tomb_dirs)
-        return len(segs)
+        postings = postings.select(
+            "word", id_col, "tf", "dl", *(("blk",) if impact else ())
+        )
+        self._write_store(postings, out, "postings", n_files, id_col)
+        self._write_store(
+            union("positions"), out, "positions", n_files, id_col
+        )
+        # blockstats are rebuilt EXACTLY from the merged stores (never
+        # merged from per-segment stats): the tombstoned rows are
+        # physically gone here, so every compacted generation's bounds
+        # and df_blk sums are exact again. The build-time width is
+        # frozen — id growth just mints higher block ids; a LEGACY meta
+        # without a width gets a fresh one derived from the merged
+        # doclens' recorded stats (defaulting to width=1 would mint a
+        # posting-sized stats store forever).
+        block_width = meta.get("block_width")
+        if block_width is None:
+            block_width = max(
+                1,
+                ((stats["id_hi"] or 0) + 1)
+                * PostingsIndex._BLOCK_DOCS
+                // max(1, stats["n_docs"]),
+            )
+        block_width = int(block_width)
+        self._write_blockstats(
+            read_back("postings", postings), out, id_col, block_width,
+            n_files,
+        )
+        self._write_meta(
+            out, id_col, meta["text_col"], block_width, impact=impact
+        )
 
     def delete_docs(self, doc_ids: DataFrame, id_col: str | None = None) -> None:
         """Tombstone documents — GenerationalStore.delete_ids under the
@@ -839,9 +679,6 @@ class PostingsIndex(GenerationalStore):
 
     def positions(self, gen: str | None = None, segs=None, dead=_UNSET) -> DataFrame:
         return self._union_store("positions", segs=segs, dead=dead, gen=gen)
-
-    def has_tombstones(self, gen: str | None = None) -> bool:
-        return bool(self._tombstone_dirs(gen))
 
     def corpus_stats(
         self, gen: str | None = None, segs: list[str] | None = None
@@ -881,18 +718,14 @@ class PostingsIndex(GenerationalStore):
         postings scanned (review r14 high); `segs` pins the segment
         snapshot the same way."""
         gen = gen or self._gen()
-        df = self.spark.read.parquet(os.path.join(gen, "blockstats"))
         if segs is None:
             segs = self._segment_dirs(gen)
+        df = self._read_store("blockstats", [gen] + segs)
         if not segs:
             # the base store is already unique per (word, blk): skip
             # the re-aggregation so every serving stats job is a bare
             # pruned scan (the common no-segment case)
             return df
-        for seg in segs:
-            df = df.unionByName(
-                self.spark.read.parquet(os.path.join(seg, "blockstats"))
-            )
         return df.groupBy("word", "blk").agg(
             F.max("max_tf").alias("max_tf"),
             F.min("min_dl").alias("min_dl"),

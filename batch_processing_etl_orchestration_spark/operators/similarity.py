@@ -616,6 +616,8 @@ class IvfIndex(GenerationalStore):
     # segments carry inverted lists only (centroids are generation
     # metadata, never per-segment)
     _CORE_STORES = ("inverted",)
+    _ID_STORE = "inverted"
+    _ID_STORE_UNIQUE = False  # n_assign rows per id
     _META_DEFAULT = {"id_col": "cand_id", "vec_col": "ce"}
 
     def __init__(self, spark, path, centroids, c_id="cand_id", c_vec="ce"):
@@ -668,25 +670,20 @@ class IvfIndex(GenerationalStore):
             fields = [candidates.schema[c_id]] + [
                 f for f in candidates.schema.fields if f.name != c_id
             ] + [T.StructField("cell_id", T.IntegerType())]
-            IvfIndex._write_observed(
+            IvfIndex._write_store(
                 empty_df(candidates.sparkSession, T.StructType(fields)),
-                out_dir, "inverted", c_id,
+                out_dir, "inverted", 1, c_id, empty=True,
             )
             return
         cells = _nearest_cells(
             candidates, c_id, c_vec, centroids, n_assign
         ).select(c_id, "cell_id")
-        # range-cluster on (cell, id) from birth: files stay cell-local
-        # for partition pruning and ids are sorted within each file, so
-        # the add-segment disjointness range-prune has tight row-group
-        # stats (review r14). The sidecar's n_docs counts inverted
-        # rows (n_assign per id): an upper bound on live ids, zero
-        # exactly when the store is empty — all its readers need.
-        IvfIndex._write_observed(
-            candidates.join(cells, c_id)
-            .repartitionByRange(8, "cell_id", c_id)
-            .sortWithinPartitions("cell_id", c_id),
-            out_dir, "inverted", c_id, partition_by="cell_id",
+        # Builds and landings write 8 files; a fold writes its n_files.
+        # The sidecar's n_docs counts inverted rows (n_assign per id):
+        # an upper bound on live ids, zero exactly when the store is
+        # empty — all its readers need.
+        IvfIndex._write_store(
+            candidates.join(cells, c_id), out_dir, "inverted", 8, c_id
         )
 
     @staticmethod
@@ -882,96 +879,23 @@ class IvfIndex(GenerationalStore):
         vector index's name."""
         self.delete_ids(ids, id_col=id_col)
 
-    def _live_ids(self, gen: str, dirs: list[str] | None = None) -> DataFrame:
-        """One row per live vector id: the inverted store replicates
-        each id n_assign times, so without the distinct the
-        disjointness conflict count would overstate by the replication
-        factor (review r14). The store clusters on (cell_id, id) —
-        see _write_inverted — so the range-prune still reaches the
-        row-group footers within each cell. `dirs` restricts the scan
-        to the sidecar interval-pruned store dirs (r16); the tombstone
-        anti-join is applied either way so a tombstoned id still
-        reports as tombstoned downstream, never as a live conflict."""
-        id_col = self._meta(gen)["id_col"]
-        if dirs is None:
-            return (
-                self._union_store("inverted", gen=gen)
-                .select(id_col)
-                .distinct()
-            )
-        df = self._read_store_dir(os.path.join(dirs[0], "inverted"))
-        for d in dirs[1:]:
-            df = df.unionByName(
-                self._read_store_dir(os.path.join(d, "inverted"))
-            )
-        dead = self._tombstones(gen)
-        if dead is not None:
-            df = df.join(F.broadcast(dead), id_col, "left_anti")
-        return df.select(id_col).distinct()
-
-    def _compact_once(self, n_files: int = 16) -> int:
-        import uuid as _uuid
-
-        gen = self._gen()  # one consistent view across both stores
-        segs = self._segment_dirs(gen)
-        tomb_dirs = self._tombstone_dirs(gen)
-        dead = (
-            self.spark.read.parquet(*tomb_dirs).distinct()
-            if tomb_dirs
-            else None
-        )
-        if not segs and dead is None:
-            return 0
+    def _fold_stores(self, out, gen, segs, dead, n_files) -> None:
         meta = self._meta(gen)
         id_col = meta["id_col"]
-        gen_name = f"gen-{_uuid.uuid4().hex[:12]}"
-        out = os.path.join(self.path, gen_name)
-        try:
-            merged = self._union_store(
-                "inverted", segs=segs, dead=dead, gen=gen
-            )
-            if merged.isEmpty():
-                # Deletes covered every vector: a partitionBy write
-                # of zero rows lands zero dynamic partitions — a
-                # _SUCCESS-only dir that fails schema inference on
-                # every later read (ADVICE r14, verified). Publish a
-                # schema-bearing NON-partitioned empty store instead
-                # (cell_id as a data column reads/unions/filters
-                # identically to a discovered partition column).
-                merged, part = merged.coalesce(1), None
-            else:
-                # range-cluster on (cell_id, id): files stay
-                # cell-local for partition pruning AND a big cell
-                # splits across ~n_files tasks instead of one giant
-                # file; the id sort gives the add-segment
-                # disjointness scan tight row-group stats
-                merged, part = (
-                    merged.repartitionByRange(n_files, "cell_id", id_col)
-                    .sortWithinPartitions("cell_id", id_col)
-                ), "cell_id"
-            # the folded base records its sidecar like a landing, so
-            # the next landing keeps its watermark and interval pruning
-            self._write_observed(
-                merged, out, "inverted", id_col, partition_by=part
-            )
-            # centroids are generation metadata: carried forward
-            # verbatim (compaction never retrains — that is build's
-            # job, explicitly)
-            self._write_centroids(self.spark, out, self._centroids(gen))
-            self._write_meta(
-                out, id_col, meta["vec_col"],
-                int(meta.get("dim", 0)), int(meta.get("n_assign", 2)),
-            )
-            self._write_folded_manifest(out, gen, segs, tomb_dirs)
-        except Exception:
-            # Never publish a torn generation; reclaim the partial dir
-            # (same rationale as PostingsIndex._compact_once)
-            import shutil
-
-            shutil.rmtree(out, ignore_errors=True)
-            raise
-        self._publish_and_rescue(gen, gen_name, out, segs, tomb_dirs)
-        return len(segs)
+        merged = self._union_store("inverted", segs=segs, dead=dead, gen=gen)
+        # the folded base records its sidecar like a landing, so the
+        # next landing keeps its watermark and interval pruning; deletes
+        # covering every vector leave an empty store
+        self._write_store(
+            merged, out, "inverted", n_files, id_col, empty=merged.isEmpty()
+        )
+        # centroids are generation metadata: carried forward verbatim
+        # (compaction never retrains — that is build's job, explicitly)
+        self._write_centroids(self.spark, out, self._centroids(gen))
+        self._write_meta(
+            out, id_col, meta["vec_col"],
+            int(meta.get("dim", 0)), int(meta.get("n_assign", 2)),
+        )
 
     # -- serving -----------------------------------------------------------
 

@@ -29,8 +29,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from batch_processing_etl_orchestration_spark.functions.exact import exact_sum
+from batch_processing_etl_orchestration_spark.tables import STATE_ROOT
 
-_CHECKPOINT_ROOT = "/root/repo/.tmp/checkpoints"
+_CHECKPOINT_ROOT = os.path.join(STATE_ROOT, "checkpoints")
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -16,12 +16,13 @@ import uuid
 
 from pyspark.sql import DataFrame
 
+from batch_processing_etl_orchestration_spark.tables import STATE_ROOT
 from batch_processing_etl_orchestration_spark.warehouse.catalog import (
     DEFAULT_DB,
     merge_idempotent,
 )
 
-_CHECKPOINT_ROOT = "/root/repo/.tmp/checkpoints"
+_CHECKPOINT_ROOT = os.path.join(STATE_ROOT, "checkpoints")
 
 
 def stream_merge_to_table(

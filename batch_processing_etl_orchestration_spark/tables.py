@@ -34,6 +34,13 @@ TABLE_NAMES = [
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+# The one root for on-disk state (build-once caches, streaming
+# checkpoints): ``.tmp`` in the checkout that holds this package, so a
+# copy of the repository keeps its state to itself.
+STATE_ROOT = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp"
+)
+
 
 def local_rows_df(spark: SparkSession, rows, schema: str) -> DataFrame:
     """Small driver-side table as an Arrow-backed LocalRelation (r15
@@ -239,7 +246,7 @@ def fixture_cache_dir(
         f"{os.path.basename(os.path.normpath(sf_dir))}"
         f"-{st.st_mtime_ns}-{st.st_size}-v{layout}"
     )
-    return os.path.join("/root/repo/.tmp", name, tag)
+    return os.path.join(STATE_ROOT, name, tag)
 
 
 _BUILD_OK = "_BUILD_OK"

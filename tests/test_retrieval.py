@@ -22,6 +22,12 @@ from batch_processing_etl_orchestration_spark.tables import load_table
 # reads its stores back with the schemas it wrote, so it runs no
 # read-back aggregation and no schema-inference job.
 FOLD_JOBS = 13
+# The same bound for folding one segment and one tombstone into an
+# impact-blocked PostingsIndex and into an IvfIndex
+# (test_fold_equals_fresh_build_of_live_docs): the impact fold
+# computes its block offsets from one collected histogram.
+IMPACT_FOLD_JOBS = 29
+IVF_FOLD_JOBS = 12
 
 
 @pytest.fixture(scope="module")
@@ -236,6 +242,118 @@ def test_segment_add_then_compact_equivalence(spark, tmp_path, count_jobs):
     assert _sidecar(seg) == _sidecar(mono) == {
         "n_docs": 4, "total_dl": 12, "id_lo": 1, "id_hi": 4,
     }
+
+
+@pytest.fixture
+def parquet_write_options(monkeypatch):
+    """{path: options} of every DataFrameWriter.parquet call."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    pending, written = {}, {}
+    option, parquet = DataFrameWriter.option, DataFrameWriter.parquet
+
+    def spy_option(self, key, value):
+        pending.setdefault(id(self), {})[key] = str(value)
+        return option(self, key, value)
+
+    def spy_parquet(self, path, *args, **kwargs):
+        written[os.path.normpath(path)] = pending.pop(id(self), {})
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "option", spy_option)
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy_parquet)
+    return written
+
+
+@pytest.mark.parametrize("family", ["postings", "impact", "ivf"])
+def test_fold_equals_fresh_build_of_live_docs(
+    spark, tmp_path, count_jobs, parquet_write_options, family
+):
+    """Folding a segment and a tombstone yields, store by store, what
+    a fresh build over the live docs writes: the same rows, sidecar
+    and files per store, and postings keep the 2 MB row-group cap.
+    Build, landing and fold share one layout per store, so a fold
+    cannot drift from the build (a fold that dropped the row-group
+    cap once made block-max pruning a no-op). The fold's Spark jobs
+    are pinned."""
+    import glob
+    import random
+
+    from batch_processing_etl_orchestration_spark.operators.similarity import (
+        IvfIndex,
+    )
+
+    rng = random.Random(7)
+    vocab = [f"w{i}" for i in range(25)]
+    dead = spark.createDataFrame([(7,)], "id BIGINT")
+    if family == "ivf":
+        docs = spark.createDataFrame(
+            [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(60)],
+            "cand_id BIGINT, ce ARRAY<DOUBLE>",
+        )
+        cent = [(c, [rng.uniform(-1, 1) for _ in range(8)]) for c in range(4)]
+
+        def build(df, name):
+            return IvfIndex.build(
+                spark, df, str(tmp_path / name), dim=8, centroids=cent
+            )
+
+        live = docs.where("cand_id <> 7")
+        stores, n_files, bound = IvfIndex._STORES, 8, IVF_FOLD_JOBS
+        idx = build(docs.where("cand_id < 40"), "fold")
+        idx.add_segment(docs.where("cand_id >= 40"), "s1")
+        idx.delete_vectors(dead, id_col="id")
+    else:
+        docs = spark.createDataFrame(
+            [
+                (i, " ".join(rng.choice(vocab) for _ in range(rng.randint(3, 30))))
+                for i in range(60)
+            ],
+            "doc_id BIGINT, text STRING",
+        )
+
+        def build(df, name):
+            return PostingsIndex.build(
+                spark, df, str(tmp_path / name),
+                impact_ordered=family == "impact",
+            )
+
+        live = docs.where("doc_id <> 7")
+        stores, n_files = PostingsIndex._STORES, 16
+        bound = IMPACT_FOLD_JOBS if family == "impact" else None
+        idx = build(docs.where("doc_id < 40"), "fold")
+        idx.add_segment(docs.where("doc_id >= 40"), "s1")
+        idx.delete_docs(dead, id_col="id")
+
+    n_folded, n_jobs = count_jobs(lambda: idx.compact_segments(n_files))
+    assert n_folded == 1
+    if bound is not None:
+        assert n_jobs <= bound, n_jobs
+    fresh = build(live, "fresh")
+    folded_gen, fresh_gen = idx._gen(), fresh._gen()
+    assert idx._segment_dirs() == [] and not idx.has_tombstones()
+    assert idx._meta() == fresh._meta()
+    assert idx._read_stats(folded_gen) == fresh._read_stats(fresh_gen)
+
+    def files(gen, store):
+        return len(
+            glob.glob(os.path.join(gen, store, "**", "part-*"), recursive=True)
+        )
+
+    for store in stores:
+        got, want = (
+            sorted(
+                tuple(r)
+                for r in spark.read.parquet(os.path.join(g, store)).collect()
+            )
+            for g in (folded_gen, fresh_gen)
+        )
+        assert got == want and got, store
+        assert files(folded_gen, store) == files(fresh_gen, store), store
+    if family != "ivf":
+        for gen in (folded_gen, fresh_gen):
+            opts = parquet_write_options[os.path.join(gen, "postings")]
+            assert opts["parquet.block.size"] == str(2 * 1024 * 1024)
 
 
 def test_tombstones_hide_then_compact_applies(spark, tmp_path):

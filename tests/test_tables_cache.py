@@ -28,7 +28,7 @@ def _patch_tmp(monkeypatch, tmp_path):
 
     def patched(sf_dir, fixture_file, name, layout=1):
         return orig(sf_dir, fixture_file, name, layout).replace(
-            "/root/repo/.tmp", str(tmp_path)
+            tables.STATE_ROOT, str(tmp_path)
         )
 
     monkeypatch.setattr(tables, "fixture_cache_dir", patched)
