@@ -57,12 +57,6 @@ def try_double(col: Column | str) -> Column:
     return c.try_cast("double")
 
 
-def try_long(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    # two-step via double so "12.0" style strings coerce like pandas
-    return c.try_cast("double").try_cast("long")
-
-
 def try_ts(col: Column | str, fmt: str | None = None) -> Column:
     """String→timestamp, null on garbage — pd.to_datetime(errors='coerce').
     EIA hourly format '2025-01-31T05' needs an explicit pattern."""
@@ -114,9 +108,3 @@ def coalesce_columns(df: DataFrame, out: str, *candidates: str) -> DataFrame:
         raise ValueError(f"none of {candidates} present in {df.columns}")
     res = df.withColumn(out, F.coalesce(*[F.col(c) for c in present]))
     return res.drop(*[c for c in present if c != out])
-
-
-def scrub_columns(df: DataFrame, *secret_cols: str) -> DataFrame:
-    """P18 API-key scrub analog: drop/redact sensitive columns before
-    persisting bronze (EIA930PipelineHourlyData.py:65)."""
-    return df.drop(*secret_cols)

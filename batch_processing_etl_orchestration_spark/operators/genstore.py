@@ -54,6 +54,11 @@ import uuid
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from batch_processing_etl_orchestration_spark.tables import (
+    _REAP_AGE_SEC,
+    MetaCache,
+)
+
 # The store-stats sidecar (module docstring); the historical name keeps
 # sidecars already on disk readable.
 _STATS_FILE = "_corpus.json"
@@ -205,11 +210,12 @@ def _is_file_vanished(exc: BaseException) -> bool:
     return False
 
 
-# (base generation store dir, store name) -> StructType. Sound because
-# a published generation's base stores are immutable (compaction writes
-# a FRESH gen-* dir); bounded by the number of generations a process
-# creates. See _read_flat_store.
-_STORE_SCHEMA_CACHE: dict = {}
+# Store schemas, keyed (base store dir, store name) or store dir. Sound
+# because a published generation's stores are immutable (compaction
+# writes a FRESH gen-* dir). Bounded at MetaCache.BOUND entries, least
+# recently used first out: every landing adds keys, so an unbounded map
+# would grow for as long as an ingest runs. See _read_flat_store.
+_STORE_SCHEMA_CACHE = MetaCache()
 
 
 class GenerationalStore:
@@ -260,14 +266,6 @@ class GenerationalStore:
         except (OSError, ValueError):
             return dict(self._META_DEFAULT)
 
-    # Orphan generations younger than this survive cleanup: a
-    # CONCURRENT mutation's not-yet-published generation, or a reader
-    # planned a couple of publishes ago, must not lose its files to an
-    # unrelated publish's opportunistic reap (ADVICE r6). Age is the
-    # lock-free guard: mutations build+publish in well under this, so
-    # anything older is a crashed attempt.
-    _REAP_AGE_SEC = 600.0
-
     def _publish(self, gen_name: str) -> None:
         """Atomically point ``current`` at `gen_name` (symlink tmp +
         rename — replaces any previous pointer in one step). Cleanup
@@ -277,7 +275,8 @@ class GenerationalStore:
         publishes must re-plan); orphans older than _REAP_AGE_SEC and
         stale _current-* temp links from crashed publishes are reaped
         (young orphans may be a concurrent mutation mid-build — left
-        alone, no lock needed)."""
+        alone, no lock needed: mutations build and publish in well
+        under _REAP_AGE_SEC, so anything older is a crashed attempt)."""
         import shutil
         import time
 
@@ -294,7 +293,7 @@ class GenerationalStore:
                     age = now - os.stat(full).st_mtime
                 except OSError:
                     continue
-                if age > self._REAP_AGE_SEC:
+                if age > _REAP_AGE_SEC:
                     shutil.rmtree(full, ignore_errors=True)
             elif d.startswith("_current-"):  # crashed-publish leftovers
                 try:
@@ -863,9 +862,9 @@ class GenerationalStore:
     def _read_flat_store(self, store: str, dirs: list[str]):
         """One scan relation over every directory of a flat store,
         with the schema resolved ONCE per (base generation, store) and
-        cached for the process (r16 optimization): schema inference
-        runs a footer-reading Spark job per spark.read.parquet call,
-        and a base + N segments union paid it N+1 times per access —
+        cached for the process: schema inference runs a
+        footer-reading Spark job per spark.read.parquet call, and a
+        base + N segments union paid it N+1 times per access —
         the dominant fixed cost of the streamed-maintenance queries'
         serving phase. Safe by the landing protocol: every segment
         store is written by the same _write path as the base with
@@ -874,26 +873,23 @@ class GenerationalStore:
         column order drift cannot misread), and a published
         generation's base store is immutable, so the cache can never
         serve a stale schema."""
-        key = (dirs[0], store)
-        schema = _STORE_SCHEMA_CACHE.get(key)
-        if schema is None:
-            schema = self.spark.read.parquet(dirs[0]).schema
-            _STORE_SCHEMA_CACHE[key] = schema
+        schema = _STORE_SCHEMA_CACHE.get(
+            (dirs[0], store), lambda: self.spark.read.parquet(dirs[0]).schema
+        )
         return self.spark.read.schema(schema).parquet(*dirs)
 
     def _read_store_dir(self, store_dir: str):
-        """One store directory with its schema cached per dir (r16):
-        the per-dir union path (partitioned stores — multi-path
-        discovery is ambiguous there) pays a footer-inference job per
+        """One store directory with its schema cached per dir: the
+        per-dir union path (partitioned stores — multi-path discovery
+        is ambiguous there) pays a footer-inference job per
         spark.read.parquet call, and the SAME immutable dirs are
         re-read every landing (_live_ids) and every serve. Store dirs
         are immutable once published/renamed into place, so a cached
         schema can never go stale; partition-column discovery (dir
         listing) still runs per read, driver-side."""
-        schema = _STORE_SCHEMA_CACHE.get(store_dir)
-        if schema is None:
-            schema = self.spark.read.parquet(store_dir).schema
-            _STORE_SCHEMA_CACHE[store_dir] = schema
+        schema = _STORE_SCHEMA_CACHE.get(
+            store_dir, lambda: self.spark.read.parquet(store_dir).schema
+        )
         return self.spark.read.schema(schema).parquet(store_dir)
 
     # -- compaction ------------------------------------------------------

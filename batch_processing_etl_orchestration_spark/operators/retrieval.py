@@ -190,10 +190,10 @@ class PostingsIndex(GenerationalStore):
                 (int(r["maxtf"]), int(r["dl"]), int(r["cnt"]), run)
             )
             run += int(r["cnt"])
-        # Arrow LocalRelation, not a Python-RDD literal: the
-        # offsets frame is broadcast into both store writes, and each
-        # broadcast of a list-backed frame re-runs its 32-slice Python
-        # scan (~0.5 s per action on local[32])
+        # tables.local_rows_df plans a LocalRelation: the offsets frame
+        # is broadcast into both store writes, and each broadcast of a
+        # list-backed frame would re-run its Python slices (~0.5 s per
+        # action on local[32]).
         return local_rows_df(
             docstats.sparkSession, offs_rows,
             "maxtf BIGINT, dl BIGINT, cnt BIGINT, off BIGINT",
@@ -908,16 +908,13 @@ _KEPT_JOIN_CAP = 1 << 20
 
 def _blk_df(spark: SparkSession, blks: list[int]):
     """Block-id membership frame for the broadcast join. The kept set
-    can reach _KEPT_JOIN_CAP ≈ 1M longs on the HOT serving path, and
-    a row-of-tuples createDataFrame re-serializes it one Python
-    object at a time — the collect+rebuild round-trip, not broadcast
-    size, was the sf100 latency cost (ADVICE r14). Ship it as ONE
-    Arrow batch instead (tables.local_pandas_df)."""
-    import pandas as pd
+    can reach _KEPT_JOIN_CAP ≈ 1M longs on the hot serving path, so it
+    goes to the JVM as one Arrow batch (tables.local_rows_df), not as a
+    list-backed frame that every evaluation re-serializes one Python
+    object at a time."""
+    from batch_processing_etl_orchestration_spark.tables import local_rows_df
 
-    from batch_processing_etl_orchestration_spark.tables import local_pandas_df
-
-    return local_pandas_df(spark, pd.DataFrame({"blk": pd.Series(blks, dtype="int64")}))
+    return local_rows_df(spark, [(b,) for b in blks], "blk BIGINT")
 
 
 def _coarse_blk_pred(col: str, blks: list[int]):

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from batch_processing_etl_orchestration_spark.operators.genstore import (
     GenerationalStore,
 )
+from batch_processing_etl_orchestration_spark.tables import MetaCache
 
 # scaled-long fold: exact, order-insensitive, primitive codegen path
 # (see plans/northstar.py and functions/exact.py for the rationale)
@@ -688,11 +689,10 @@ class IvfIndex(GenerationalStore):
 
     @staticmethod
     def _write_centroids(spark, gen_dir: str, centroids) -> None:
-        # Arrow LocalRelation, not a Python-RDD literal (r15): a
-        # coalesce(1) write of a list-backed frame evaluates its 32
-        # Python slices SEQUENTIALLY in the one task (measured 5-9 s
-        # on local[32] for 8 rows); the LocalRelation write is one
-        # trivial JVM task (~0.3 s)
+        # tables.local_rows_df plans a LocalRelation: the coalesce(1)
+        # write is one trivial JVM task (~0.3 s), where a list-backed
+        # frame would evaluate its Python slices sequentially in that
+        # task (measured 5-9 s on local[32] for 8 rows).
         from batch_processing_etl_orchestration_spark.tables import (
             local_rows_df,
         )
@@ -726,7 +726,7 @@ class IvfIndex(GenerationalStore):
                 f,
             )
 
-    _CENTROIDS_CACHE: dict = {}
+    _CENTROIDS_CACHE = MetaCache()
 
     def _centroids(self, gen: str | None = None):
         """The PINNED generation's quantizer (n_cells rows — index
@@ -735,19 +735,18 @@ class IvfIndex(GenerationalStore):
         handle that outlived a retrain can never assign or probe with
         a stale quantizer.
 
-        Cached per generation dir (r16): centroids are FROZEN at
+        Cached per generation dir: centroids are FROZEN at
         build/compact and the gen dir is immutable once published, so
         the read+collect job each landing and each probe paid (the
         k-row quantizer is re-read per call) can never serve stale
         values. Process-local, n_cells rows per entry."""
         path = os.path.join(gen or self._gen(), "centroids")
-        hit = IvfIndex._CENTROIDS_CACHE.get(path)
-        if hit is not None:
-            return hit
-        rows = self.spark.read.parquet(path).collect()
-        out = sorted((r["cell_id"], list(r["centroid"])) for r in rows)
-        IvfIndex._CENTROIDS_CACHE[path] = out
-        return out
+
+        def load():
+            rows = self.spark.read.parquet(path).collect()
+            return sorted((r["cell_id"], list(r["centroid"])) for r in rows)
+
+        return IvfIndex._CENTROIDS_CACHE.get(path, load)
 
     # -- lifecycle ---------------------------------------------------------
 

@@ -40,7 +40,6 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.ansi.enabled", "false")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))

@@ -19,7 +19,7 @@ from batch_processing_etl_orchestration_spark.sources.xlsx import (
     read_workbook,
     rows_to_header_and_data,
 )
-from batch_processing_etl_orchestration_spark.tables import local_arrow_df
+from batch_processing_etl_orchestration_spark.tables import local_rows_df
 
 
 def read_csv_dim(spark: SparkSession, path: str) -> DataFrame:
@@ -55,8 +55,8 @@ def read_excel_sheets(
     EIA930PipelineHourlyData.py:33-34). Sheets parse on the driver
     (stdlib zip+XML — workbook dims are driver-small by contract) and
     become broadcast-ready Arrow-backed LocalRelations
-    (tables.local_arrow_df). ``max_cols``
-    mirrors the reference's first-6-column BA projection (.iloc[:, :6],
+    (tables.local_rows_df). ``max_cols`` mirrors the reference's
+    first-6-column BA projection (.iloc[:, :6],
     EIA930PipelineHourlyData.py:34)."""
     out: dict[str, DataFrame] = {}
     for name, grid in read_workbook(path, sheets).items():
@@ -84,7 +84,7 @@ def read_excel_sheets(
             )
             for row in data
         ]
-        out[name] = local_arrow_df(spark, coerced, schema)
+        out[name] = local_rows_df(spark, coerced, schema)
     return out
 
 

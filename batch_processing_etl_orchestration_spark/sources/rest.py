@@ -12,13 +12,12 @@ DataFrame with an explicit schema (bronze is schema-on-read: strings,
 plus the numeric arrays of the weather feed).
 
 The bronze frame is an Arrow-backed ``LocalRelation``
-(``tables.local_arrow_df``), not a list-based ``createDataFrame``: that
+(``tables.local_rows_df``), not a list-based ``createDataFrame``: that
 plans a Python RDD, and every merge the job runs evaluates it again,
-starting Python workers each time. It must stay NaN-preserving, so it
-does not go through the pandas path (``tables.local_rows_df``), which
-turns NaN into null: Open-Meteo hours carry NaN for missing readings,
-and the landed values and the per-state means/std built from them
-would change.
+starting Python workers each time. The builder keeps NaN, which
+matters here: Open-Meteo hours carry NaN for missing readings, and
+turning them into null would change the landed values and the
+per-state means/std built from them.
 
 Scale: ingest loops are driver-side by design (the API is the
 bottleneck, not Spark); for fan-out across many endpoints/coordinates
@@ -36,7 +35,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from batch_processing_etl_orchestration_spark.tables import local_arrow_df
+from batch_processing_etl_orchestration_spark.tables import local_rows_df
 
 
 @dataclass
@@ -89,7 +88,7 @@ class PaginatedRestSource:
         all_rows: list[dict] = []
         for page in self.pages():
             all_rows.extend(page)
-        return local_arrow_df(spark, all_rows, schema)
+        return local_rows_df(spark, all_rows, schema)
 
 
 def scrub_params(params: dict[str, Any], *secret_keys: str) -> dict[str, Any]:

@@ -25,7 +25,7 @@ pandas/openpyxl where available.
 
 Scale: workbook dimensions are driver-small by contract (the
 reference's BA sheet is a few hundred rows). The parsed rows become a
-Spark LocalRelation via ``tables.local_arrow_df`` and are broadcast
+Spark LocalRelation via ``tables.local_rows_df`` and are broadcast
 into joins — the same posture as every other dimension source in
 sources/.
 """

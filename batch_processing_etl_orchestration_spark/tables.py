@@ -15,6 +15,8 @@ happen in the scan either way.
 from __future__ import annotations
 
 import os
+import threading
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -42,37 +44,21 @@ STATE_ROOT = os.path.join(
 )
 
 
-def local_rows_df(spark: SparkSession, rows, schema: str) -> DataFrame:
-    """Small driver-side table as an Arrow-backed LocalRelation (r15
-    optimization, guide §4). A list-based createDataFrame plans a
-    Python RDD cut into defaultParallelism slices, and EVERY action
-    that evaluates it — a broadcast build, a write, a coalesce(1) —
-    spins Python workers per slice: measured on local[32], ~5-9 s
-    for a coalesce(1) write of 8 rows and ~0.5 s per broadcast.
-    The pandas+Arrow path plans a LocalRelation instead: converted
-    driver-side, zero tasks, ~0.3 s, and re-references (one frame
-    broadcast into two joins) cost nothing new. The explicit DDL
-    schema governs types exactly as the list path would; the arrow
-    conf is forced ON around the call (runtime-settable) so the
-    fast path also holds under a vanilla session with arrow off."""
-    import pandas as pd
-    from pyspark.sql.types import _parse_datatype_string
+def local_rows_df(spark: SparkSession, rows, schema) -> DataFrame:
+    """Driver rows as an Arrow-backed LocalRelation: the one way the
+    package turns driver-side rows into a frame. A list-based
+    createDataFrame plans a Python RDD, and every action that
+    evaluates it (a broadcast build, a write, a merge) starts Python
+    workers per slice; a LocalRelation is converted on the driver once
+    and costs no tasks however often it is re-referenced.
 
-    names = [f.name for f in _parse_datatype_string(schema).fields]
-    pdf = pd.DataFrame(
-        [tuple(r) for r in rows], columns=names, dtype=object
-    )
-    return local_pandas_df(spark, pdf, schema)
-
-
-def local_arrow_df(spark: SparkSession, rows, schema) -> DataFrame:
-    """Driver rows as an Arrow-backed LocalRelation that keeps the
-    list path's values exactly, NaN included (the pandas path of
-    local_rows_df turns NaN into null). Rows are dicts keyed by field
-    name, a missing key landing as null, or sequences in field order.
-    Non-string values in top-level STRING fields render as the list
-    path renders them: str(v), booleans as 'true'/'false'. No Python
-    RDD and no Arrow conf: the pyarrow.Table goes to the JVM as is."""
+    ``schema`` is a DDL string or a StructType. Rows are dicts keyed by
+    field name, a missing key landing as null, or sequences in field
+    order. Values land as the list path lands them, NaN included (also
+    inside arrays); non-string values in top-level STRING fields render
+    as the list path renders them: str(v), booleans as 'true'/'false'.
+    The pyarrow.Table goes to the JVM as is, so the session's Arrow
+    conf is neither read nor set."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StringType, _parse_datatype_string
@@ -99,27 +85,9 @@ def _list_path_string(v):
     return str(v)
 
 
-def local_pandas_df(spark: SparkSession, pdf, schema=None) -> DataFrame:
-    """createDataFrame(pandas) with Arrow forced on (see
-    local_rows_df) — same values, same schema, LocalRelation plan
-    instead of a Python RDD. The enable is ONE-WAY idempotent, never
-    restored — the _blk_df convention (review r15): a set/create/
-    unset window races concurrent builders in the same session, and
-    an interleaved unset silently drops a peer back to the
-    row-at-a-time path. Leaving Arrow on is semantics-preserving:
-    the conf only governs pandas⇄Spark conversion transport, and
-    every frame the package converts is a plain-typed literal."""
-    k = "spark.sql.execution.arrow.pyspark.enabled"
-    if spark.conf.get(k, "false") != "true":
-        spark.conf.set(k, "true")
-    if schema is not None:
-        return spark.createDataFrame(pdf, schema=schema)
-    return spark.createDataFrame(pdf)
-
-
 def empty_df(spark: SparkSession, schema) -> DataFrame:
     """Zero-row DataFrame with the given schema (DDL string or
-    StructType) built JVM-ONLY on ONE partition (r15 optimization):
+    StructType) built JVM-only on ONE partition:
     createDataFrame([], schema) plans a 32-slice Python RDD whose
     every evaluation spins Python workers, and its writes can land
     zero files. range(0) + typed null casts plans a trivial JVM
@@ -135,37 +103,69 @@ def empty_df(spark: SparkSession, schema) -> DataFrame:
     )
 
 
-# (fixture path, mtime_ns, size) -> StructType (r16 optimization):
-# every bare spark.read.parquet runs a footer-reading schema-inference
-# job (~0.05-0.15 s of fixed overhead locally), and the bench's timed
-# region pays one per load_table call — hundreds across the catalog.
-# Keyed on the file's identity stats (the fixture_cache_dir rule), so
-# a regenerated fixture re-infers instead of serving a stale schema.
-# Schema metadata only — never data, never results.
-_FIXTURE_SCHEMA_CACHE: dict = {}
+class MetaCache:
+    """Process-wide LRU map for immutable metadata: schemas and
+    quantizers whose key names data that never changes in place (a
+    fixture's identity stats, an immutable directory), so an entry can
+    never go stale. Bounded, because a long-running ingest creates a
+    new generation directory, and with it new keys, on every landing.
+    load() runs outside the lock: concurrent driver threads never wait
+    on one another's Spark job, and a duplicate load of immutable
+    metadata is harmless."""
+
+    BOUND = 1024
+
+    def __init__(self):
+        self._entries: OrderedDict = OrderedDict()
+        self._lock = threading.Lock()
+
+    def get(self, key, load):
+        with self._lock:
+            if key in self._entries:
+                self._entries.move_to_end(key)
+                return self._entries[key]
+        value = load()
+        with self._lock:
+            self._entries[key] = value
+            self._entries.move_to_end(key)
+            while len(self._entries) > self.BOUND:
+                self._entries.popitem(last=False)
+        return value
+
+    def __len__(self) -> int:
+        return len(self._entries)
+
+
+# Fixture and build_once artifact schemas. Every bare
+# spark.read.parquet runs a footer-reading schema-inference job
+# (~0.05-0.15 s of fixed overhead locally), and the bench's timed
+# region pays one per load_table call. Schema metadata only, never
+# data or results.
+_FIXTURE_SCHEMA_CACHE = MetaCache()
 
 
 def _read_fixture(spark: SparkSession, path: str) -> DataFrame:
+    # Keyed on the file's identity stats (the fixture_cache_dir rule),
+    # so a regenerated fixture re-infers instead of serving a stale
+    # schema.
     st = os.stat(path)
-    key = (path, st.st_mtime_ns, st.st_size)
-    schema = _FIXTURE_SCHEMA_CACHE.get(key)
-    if schema is None:
-        schema = spark.read.parquet(path).schema
-        _FIXTURE_SCHEMA_CACHE[key] = schema
+    schema = _FIXTURE_SCHEMA_CACHE.get(
+        (path, st.st_mtime_ns, st.st_size),
+        lambda: spark.read.parquet(path).schema,
+    )
     return spark.read.schema(schema).parquet(path)
 
 
 def read_artifact(spark: SparkSession, path: str) -> DataFrame:
     """Read an IMMUTABLE build_once artifact dir with its schema
-    inferred once per process (r16): the cache keys on the path alone
+    inferred once per process: the cache keys on the path alone
     because a build_once dir's identity is IN its path
     (fixture_cache_dir embeds the fixture's mtime_ns/size and the
     layout version — a regenerated fixture yields a different path).
     Do not use for mutable dirs."""
-    schema = _FIXTURE_SCHEMA_CACHE.get(path)
-    if schema is None:
-        schema = spark.read.parquet(path).schema
-        _FIXTURE_SCHEMA_CACHE[path] = schema
+    schema = _FIXTURE_SCHEMA_CACHE.get(
+        path, lambda: spark.read.parquet(path).schema
+    )
     return spark.read.schema(schema).parquet(path)
 
 
@@ -219,16 +219,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return _read_fixture(spark, path)
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in TABLE_NAMES}
-
-
-def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view for spark.sql use."""
-    for n in TABLE_NAMES:
-        load_table(spark, sf_dir, n).createOrReplaceTempView(n)
-
-
 def fixture_cache_dir(
     sf_dir: str, fixture_file: str, name: str, layout: int = 1
 ) -> str:
@@ -251,10 +241,8 @@ def fixture_cache_dir(
 
 _BUILD_OK = "_BUILD_OK"
 
-import threading as _threading  # noqa: E402
-
-_BUILD_LOCKS: dict[str, "_threading.Lock"] = {}
-_BUILD_LOCKS_GUARD = _threading.Lock()
+_BUILD_LOCKS: dict[str, threading.Lock] = {}
+_BUILD_LOCKS_GUARD = threading.Lock()
 
 # Per-family build-once cache observations for THIS process (VERDICT
 # r15 next #6): name -> {"state": "warm"} when the first resolve of
@@ -265,10 +253,10 @@ _BUILD_LOCKS_GUARD = _threading.Lock()
 # same family (the interesting fact is that the run built it).
 BUILD_ONCE_STATS: dict[str, dict] = {}
 
-# Minimum idle age before a stale sibling cache tag is reaped —
-# matches PostingsIndex._REAP_AGE_SEC (operators/retrieval.py): long
-# enough that any live process still touching the tag has refreshed
-# its mtime or finished.
+# Minimum idle age before a stale on-disk cache tag (here) or an
+# orphan index generation (GenerationalStore._publish) is reaped: long
+# enough that any live process still touching it has refreshed its
+# mtime or finished.
 _REAP_AGE_SEC = 600.0
 
 
@@ -296,7 +284,7 @@ def build_once(
     # directory. Process-local by design — cross-process overlap is
     # already handled by the _BUILD_OK marker + reap-age rules.
     with _BUILD_LOCKS_GUARD:
-        lock = _BUILD_LOCKS.setdefault(name, _threading.Lock())
+        lock = _BUILD_LOCKS.setdefault(name, threading.Lock())
     with lock:
         return _build_once_locked(sf_dir, fixture_file, name, build, layout)
 

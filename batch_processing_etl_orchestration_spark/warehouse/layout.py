@@ -1,11 +1,12 @@
-"""Physical layout utilities: date-partitioned and bucketed writes —
-the two levers that make 100 TB queries cheap (SCALE.md §storage).
+"""Physical layout utilities: date-partitioned writes, compaction and
+clustering. Date partitioning and bucketing are the two levers that
+make 100 TB queries cheap (SCALE.md §storage).
 
 The reference stores flat Postgres tables; every date-bounded query
 scans everything. Here, facts land date-partitioned (partition pruning
 turns the reference's bounded fetch horizons into near-free scans) and
-optionally bucketed by their join key (shuffle-free fact-fact joins —
-proven in tests/test_bucketing.py).
+can be bucketed by their join key with a plain ``bucketBy`` write
+(shuffle-free fact-fact joins — proven in tests/test_bucketing.py).
 """
 
 from __future__ import annotations
@@ -30,23 +31,6 @@ def write_date_partitioned(
 
 def read_date_partitioned(spark, path: str) -> DataFrame:
     return spark.read.parquet(path)
-
-
-def write_bucketed_table(
-    df: DataFrame,
-    table: str,
-    bucket_col: str,
-    n_buckets: int,
-    mode: str = "overwrite",
-) -> None:
-    """Write a bucketed+sorted managed table; joins/aggregations on
-    bucket_col against same-bucketed tables need no shuffle."""
-    (
-        df.write.mode(mode)
-        .bucketBy(n_buckets, bucket_col)
-        .sortBy(bucket_col)
-        .saveAsTable(table)
-    )
 
 
 def compact_parquet(

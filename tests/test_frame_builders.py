@@ -1,27 +1,104 @@
-"""One way to build driver-side frames: only tables.py calls
-createDataFrame (local_arrow_df and local_pandas_df wrap it, empty_df
-avoids it); every other package module goes through those helpers, so
-no module plans a Python RDD out of a driver-side list by accident."""
+"""One way to build driver-side frames: tables.local_rows_df. Only
+tables.py calls createDataFrame, and only from that one function
+(empty_df avoids it), so no module plans a Python RDD out of a
+driver-side list by accident. No package module sets the session's
+Arrow conf: the builder hands pyarrow a table directly and needs none,
+and a builder that flipped it would change the session for every later
+caller. The contract tests pin what every caller relies on: NaN kept,
+dict and tuple rows alike, empty rows as a job-free LocalRelation, and
+the session's conf left as found."""
 
 from __future__ import annotations
 
 import ast
+import math
 import pathlib
 
 import batch_processing_etl_orchestration_spark as pkg
+from batch_processing_etl_orchestration_spark.tables import local_rows_df
+
+_ROOT = pathlib.Path(pkg.__file__).parent
+_ARROW_CONF = "spark.sql.execution.arrow.pyspark.enabled"
+
+
+def _modules():
+    for path in sorted(_ROOT.rglob("*.py")):
+        yield path, ast.parse(path.read_text(), str(path))
+
+
+def _create_dataframe_calls(node):
+    return [
+        n
+        for n in ast.walk(node)
+        if isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr == "createDataFrame"
+    ]
 
 
 def test_only_tables_calls_create_dataframe():
-    root = pathlib.Path(pkg.__file__).parent
-    offenders = []
-    for path in sorted(root.rglob("*.py")):
-        if path == root / "tables.py":
-            continue
-        for node in ast.walk(ast.parse(path.read_text(), str(path))):
-            if (
-                isinstance(node, ast.Call)
-                and isinstance(node.func, ast.Attribute)
-                and node.func.attr == "createDataFrame"
-            ):
-                offenders.append(f"{path.relative_to(root)}:{node.lineno}")
+    offenders = [
+        f"{path.relative_to(_ROOT)}:{call.lineno}"
+        for path, tree in _modules()
+        if path != _ROOT / "tables.py"
+        for call in _create_dataframe_calls(tree)
+    ]
     assert not offenders, f"createDataFrame outside tables.py: {offenders}"
+
+
+def test_tables_has_one_create_dataframe_function():
+    tree = ast.parse((_ROOT / "tables.py").read_text())
+    callers = [
+        node.name
+        for node in ast.walk(tree)
+        if isinstance(node, ast.FunctionDef) and _create_dataframe_calls(node)
+    ]
+    assert callers == ["local_rows_df"], callers
+
+
+def test_no_module_sets_arrow_conf():
+    offenders = [
+        f"{path.relative_to(_ROOT)}:{node.lineno}"
+        for path, tree in _modules()
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Constant) and node.value == _ARROW_CONF
+    ]
+    assert not offenders, f"Arrow conf named in package code: {offenders}"
+
+
+def test_nan_survives_top_level_and_in_arrays(spark):
+    nan = float("nan")
+    (row,) = local_rows_df(
+        spark, [(1, nan, [nan, 1.5])], "id BIGINT, x DOUBLE, v ARRAY<DOUBLE>"
+    ).collect()
+    assert math.isnan(row["x"])
+    assert math.isnan(row["v"][0]) and row["v"][1] == 1.5
+
+
+def test_dict_rows_equal_tuple_rows(spark):
+    schema = "name STRING, n BIGINT, flag BOOLEAN"
+    tuples = local_rows_df(spark, [("a", 1, True), (None, 2, None)], schema)
+    dicts = local_rows_df(
+        spark, [{"name": "a", "n": 1, "flag": True}, {"n": 2}], schema
+    )
+    assert dicts.schema == tuples.schema
+    assert dicts.collect() == tuples.collect()
+
+
+def test_empty_rows_plan_local_relation_and_run_no_job(spark, count_jobs):
+    df = local_rows_df(spark, [], "word STRING, df BIGINT")
+    plan = df._jdf.queryExecution().analyzed().toString()
+    assert "LocalRelation" in plan, plan
+    rows, jobs = count_jobs(df.collect)
+    assert rows == [] and jobs == 0
+
+
+def test_arrow_conf_left_as_found(spark):
+    before = spark.conf.get(_ARROW_CONF)
+    try:
+        for value in ("false", "true"):
+            spark.conf.set(_ARROW_CONF, value)
+            local_rows_df(spark, [(1,)], "n BIGINT").collect()
+            assert spark.conf.get(_ARROW_CONF) == value
+    finally:
+        spark.conf.set(_ARROW_CONF, before)
