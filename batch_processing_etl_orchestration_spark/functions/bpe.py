@@ -137,7 +137,7 @@ def load_merges_sf10() -> list[tuple[str, str]]:
     before saturating — past the multi-thousand-merge bar the sf1
     corpus physically cannot reach. Trained by
       python tools/train_bpe.py \\
-        '/root/repo/.tmp/sf10/documents.parquet/**/*.parquet' 8192 \\
+        '.tmp/sf10/documents.parquet/**/*.parquet' 8192 \\
         .../functions/bpe_merges_sf10.json
     (deterministic: lexicographic tie-break, so retraining on the same
     fixture reproduces the identical list)."""

@@ -15,6 +15,19 @@ cluster. Everything below is plain public Spark configuration:
   (OpenMeteoWeatherPipelineHourlyData.py:67-68).
 - shuffle.partitions sized for local[32] test runs; on a real cluster
   AQE coalescing makes the static number mostly irrelevant.
+- Driver JIT policy (`-XX:CICompilerCount=2 -XX:Tier4LoadFeedback=2`):
+  one C1 and one C2 compiler thread, and tier-4 thresholds scaled by
+  the C2 queue length (queue / (2 x 1 thread) + 1; the JVM default
+  on 4 cores is queue / (3 x 2 threads) + 1). A once-a-day batch
+  starts in a cold JVM whose C2 queue floods with Spark's fixed code
+  (Janino, Java serialization, the SQL parser), so lukewarm methods
+  stay in C1; once the queue drains the thresholds are the defaults
+  again and hot loops still reach C2. It is
+  `spark.driver.defaultJavaOptions`, which Spark puts ahead of a
+  caller's `extraJavaOptions`; a caller's own
+  `spark.driver.defaultJavaOptions` replaces it. It does not apply to
+  a driver JVM already launched by `spark-submit`, nor to cluster
+  executors, which keep the JVM defaults.
 """
 
 from __future__ import annotations
@@ -22,6 +35,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_DRIVER_JIT_OPTS = "-XX:CICompilerCount=2 -XX:Tier4LoadFeedback=2"
 
 
 def get_spark(
@@ -50,6 +65,7 @@ def get_spark(
         # rebuilt as TIMESTAMP_NTZ by the loader (tables.load_table) —
         # set once here, never toggled per-read.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.driver.defaultJavaOptions", _DRIVER_JIT_OPTS)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

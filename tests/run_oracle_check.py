@@ -7,11 +7,14 @@ per query. Usage:
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 import traceback
 
-sys.path.insert(0, "/root/repo")
+# The checkout that holds this file, so a copy of the repository checks
+# its own package.
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from batch_processing_etl_orchestration_spark.plans import QUERIES
 from batch_processing_etl_orchestration_spark.session import get_spark
@@ -25,8 +28,6 @@ def main() -> None:
         "spark.driver.memory": "6g",
     })
     spark.sparkContext.setLogLevel("ERROR")
-    import os
-
     sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     n_pass = n_fail = 0
     for name, spec in sorted(QUERIES.items()):

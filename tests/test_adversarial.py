@@ -6,12 +6,14 @@ sweep (tools/verify_adversarial.py) numbers live in SCALE.md."""
 
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo/tools")
+_CHECKOUT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(_CHECKOUT, "tools"))
 
 
 @pytest.fixture(scope="module")

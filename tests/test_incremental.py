@@ -260,13 +260,17 @@ def test_stream_mv_processes_multiple_microbatches(spark):
     import os
 
     from batch_processing_etl_orchestration_spark.plans import QUERIES
+    from batch_processing_etl_orchestration_spark.tables import (
+        fixture_cache_dir,
+    )
 
     fn = QUERIES["q_stream_incremental_mv"].fn
     out1 = {tuple(r) for r in fn(spark, "/root/testdata/sf0.01").collect()}
-    # r12: idempotence tokens now live INSIDE the MV commit
-    runs = glob.glob(
-        "/root/repo/.tmp/stream_mv_run/sf0.01-*/mv/_commits/batch_*"
+    # idempotence tokens live INSIDE the MV commit
+    run = fixture_cache_dir(
+        "/root/testdata/sf0.01", "events.parquet", "stream_mv_run"
     )
+    runs = glob.glob(os.path.join(run, "mv", "_commits", "batch_*"))
     assert len(runs) == 6, runs
     # determinism across full re-runs (fresh MV + checkpoint each call)
     out2 = {tuple(r) for r in fn(spark, "/root/testdata/sf0.01").collect()}

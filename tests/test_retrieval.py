@@ -159,9 +159,12 @@ def test_phrase_scan_prunes_to_terms(spark, sf_dir):
         PostingsIndex,
         phrase_search,
     )
-    from batch_processing_etl_orchestration_spark.tables import load_table
+    from batch_processing_etl_orchestration_spark.tables import (
+        STATE_ROOT,
+        load_table,
+    )
 
-    path = "/root/repo/.tmp/test_phrase_idx"
+    path = os.path.join(STATE_ROOT, "test_phrase_idx")
     if not PostingsIndex.exists(spark, path):
         PostingsIndex.build(
             spark, load_table(spark, sf_dir, "documents"), path

@@ -4,6 +4,9 @@ exactly-once posture the reference lacks."""
 
 from __future__ import annotations
 
+import os
+from urllib.parse import urlparse
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -14,6 +17,12 @@ from batch_processing_etl_orchestration_spark.warehouse.catalog import create_da
 
 DB = "stream_sink_test"
 TABLE = "events_landed"
+
+
+def _table_dir(spark, table: str) -> str:
+    """Managed location of ``DB.table`` under the session's warehouse."""
+    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+    return os.path.join(wh, f"{DB}.db", table)
 
 
 @pytest.fixture(scope="module", autouse=True)
@@ -181,9 +190,7 @@ def test_stream_merge_checkpoint_resume_exactly_once(spark, tmp_path):
     table = "events_resume"
     spark.sql(f"DROP TABLE IF EXISTS {DB}.{table}")
     # a previous aborted run can leave the managed location behind
-    shutil.rmtree(
-        f"/root/repo/spark-warehouse/{DB}.db/{table}", ignore_errors=True
-    )
+    shutil.rmtree(_table_dir(spark, table), ignore_errors=True)
     create_table(
         spark,
         table,
@@ -242,9 +249,7 @@ def test_stream_merge_checkpoint_resume_exactly_once(spark, tmp_path):
         assert got_sum[1] == int(expected["event_id"].sum())
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {DB}.{table}")
-        shutil.rmtree(
-            f"/root/repo/spark-warehouse/{DB}.db/{table}", ignore_errors=True
-        )
+        shutil.rmtree(_table_dir(spark, table), ignore_errors=True)
 
 
 def test_stream_mv_checkpoint_resume_exactly_once(spark, tmp_path):

@@ -37,3 +37,15 @@ def test_catalog_runs_on_bare_session():
         + "\n"
         + proc.stderr[-6000:]
     )
+
+
+def test_driver_jvm_runs_jit_policy(spark):
+    """session.get_spark launches the driver JVM with its JIT policy
+    (one C2 thread, backlog-scaled tier-4 thresholds): read the running
+    JVM's own input arguments, which a Spark conf that never reached
+    the JVM would not show."""
+    args = list(
+        spark.sparkContext._jvm.java.lang.management.ManagementFactory
+        .getRuntimeMXBean().getInputArguments()
+    )
+    assert {"-XX:CICompilerCount=2", "-XX:Tier4LoadFeedback=2"} <= set(args), args

@@ -6,7 +6,7 @@ not a guess. For fan-out S in {1, 4, 16, 64}:
 - build an impact-ordered PostingsIndex from an EMPTY bootstrap by
   landing S add_segment batches (doc_id % S, ascending batch order —
   the q_stream_index_maintain_impact shape), cached under
-  .tmp/segbench/s{S} with a _BUILD_OK marker;
+  <tables.STATE_ROOT>/segbench/s{S} with a _BUILD_OK marker;
 - measure warm block-max BM25 serving (min_docs=0 forces the pruned
   path; median of 3 runs) and the kept/candidate prune geometry
   (blockmax_prune_plan's blocks frame — candidate blocks, kept
@@ -34,8 +34,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-SF10 = "/root/repo/.tmp/sf10"
-ROOT = "/root/repo/.tmp/segbench"
+from batch_processing_etl_orchestration_spark.tables import STATE_ROOT  # noqa: E402
+
+SF10 = os.path.join(STATE_ROOT, "sf10")
+ROOT = os.path.join(STATE_ROOT, "segbench")
 FANOUTS = [1, 4, 16, 64]
 TERMS = ["join", "hash", "scan"]
 REPS = 3

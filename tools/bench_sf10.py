@@ -1,6 +1,6 @@
 """Second scaling decade (VERDICT r8 next #4): time the 12 heaviest
-catalog queries at sf1 (/root/repo/.tmp/sf1) and sf10
-(/root/repo/.tmp/sf10, tools/make_sf1.py 100) in one session and
+catalog queries at sf1 (<tables.STATE_ROOT>/sf1) and sf10
+(<tables.STATE_ROOT>/sf10, tools/make_sf1.py 100) in one session and
 print per-query walls + sf1→sf10 ratios. Each query runs twice per
 sf; the WARM run carries the scaling signal (the cold run includes
 one-time build_once artifacts — index builds, label stores — whose
@@ -44,8 +44,10 @@ HEAVY = [
     "q_stream_sessionize_capped",
 ]
 
-SF1 = "/root/repo/.tmp/sf1"
-SF10 = "/root/repo/.tmp/sf10"
+from batch_processing_etl_orchestration_spark.tables import STATE_ROOT  # noqa: E402
+
+SF1 = os.path.join(STATE_ROOT, "sf1")
+SF10 = os.path.join(STATE_ROOT, "sf10")
 
 
 def main() -> None:

@@ -40,10 +40,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from batch_processing_etl_orchestration_spark.tables import STATE_ROOT  # noqa: E402
+
 REPLICAS = 1000
 CHUNK = 50
-SF100 = "/root/repo/.tmp/sf100"
-SF10 = "/root/repo/.tmp/sf10"
+SF100 = os.path.join(STATE_ROOT, "sf100")
+SF10 = os.path.join(STATE_ROOT, "sf10")
 MARKER = os.path.join(SF100, "_BUILD_OK")
 
 QUERIES_3 = ["q_minhash_lsh_pairs", "q_exact_span_dedup", "q_decontaminate_bloom"]

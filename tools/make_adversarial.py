@@ -15,7 +15,7 @@ Deterministic (doc_id / event_id modulus — no RNG). Other tables are
 byte-copied so the full catalog still runs against the output dir.
 
 Usage: python tools/make_adversarial.py [src_dir] [out_dir]
-       (defaults: /root/testdata/sf0.1 → /root/repo/.tmp/adversarial)
+       (defaults: /root/testdata/sf0.1 → <tables.STATE_ROOT>/adversarial)
 Verification sweep + SCALE.md numbers: tools/verify_adversarial.py;
 fixture-scale assertions: tests/test_adversarial.py.
 """
@@ -130,9 +130,12 @@ def build(spark, src: str, out: str) -> dict:
 
 def main() -> None:
     from batch_processing_etl_orchestration_spark.session import get_spark
+    from batch_processing_etl_orchestration_spark.tables import STATE_ROOT
 
     src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    out = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/.tmp/adversarial"
+    out = sys.argv[2] if len(sys.argv) > 2 else os.path.join(
+        STATE_ROOT, "adversarial"
+    )
     spark = get_spark(
         "make-adversarial",
         master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",

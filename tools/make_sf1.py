@@ -1,6 +1,6 @@
 """Deterministic sf1 fixture: a 10× key-offset replication of the
-driver's sf0.1 testdata, written to /root/repo/.tmp/sf1 (the driver's
-testdata tree is read-only). No RNG — replica r of each fact/entity
+sf0.1 testdata, written to <tables.STATE_ROOT>/sf1 (the testdata tree
+is read-only). No RNG — replica r of each fact/entity
 table shifts every key by r × (max key + 1), so join fan-outs,
 group-count growth, and skew shape scale the way a real 10× corpus
 would: 10× users over the same time range, 10× orders across 10×
@@ -28,10 +28,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import DataFrame, functions as F
 
 from batch_processing_etl_orchestration_spark.session import get_spark
-from batch_processing_etl_orchestration_spark.tables import load_table
+from batch_processing_etl_orchestration_spark.tables import STATE_ROOT, load_table
 
 SRC = "/root/testdata/sf0.1"
-OUT = "/root/repo/.tmp/sf1"  # default for 10 replicas; sfN/10 otherwise
+OUT = os.path.join(STATE_ROOT, "sf1")  # default for 10 replicas; sfN/10 otherwise
 
 # (table, key columns to offset by that table's own entity count,
 #  foreign keys to offset by the referenced table's count)
@@ -75,13 +75,14 @@ def doc_transform(df: DataFrame, r: int) -> DataFrame:
 
 def main(replicas: int = 10, out_dir: str | None = None) -> None:
     """replicas=10 → the sf1 fixture; any other N writes
-    /root/repo/.tmp/sf{N/10:g} (e.g. 100 → .tmp/sf10, VERDICT r8 next
-    #4's second scaling decade). Same deterministic key-offset
+    <tables.STATE_ROOT>/sf{N/10:g} (e.g. 100 → sf10, the second
+    scaling decade). Same deterministic key-offset
     construction at every N; the destination is a local, so repeated
     in-process calls stay order-independent (review r9)."""
     if out_dir is None:
         out_dir = (
-            OUT if replicas == 10 else f"/root/repo/.tmp/sf{replicas / 10:g}"
+            OUT if replicas == 10
+            else os.path.join(STATE_ROOT, f"sf{replicas / 10:g}")
         )
     spark = get_spark("make-sf1", master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
     os.makedirs(out_dir, exist_ok=True)

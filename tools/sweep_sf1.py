@@ -40,9 +40,10 @@ STRUCTURAL = {
 def main() -> None:
     from batch_processing_etl_orchestration_spark.plans import QUERIES
     from batch_processing_etl_orchestration_spark.session import get_spark
+    from batch_processing_etl_orchestration_spark.tables import STATE_ROOT
     from tests.oracle_utils import compare_query
 
-    sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/repo/.tmp/sf1")
+    sf = os.environ.get("SPARK_GRAFT_SF_DIR", os.path.join(STATE_ROOT, "sf1"))
     spark = get_spark("sweep-sf1", master="local[8]", extra_conf={
         "spark.sql.shuffle.partitions": "8",
         "spark.driver.memory": "6g",

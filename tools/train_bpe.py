@@ -79,7 +79,7 @@ def main() -> None:
     # argv: [corpus_glob] [n_merges] [out_json] — defaults reproduce
     # the original 48-merge sf0.001 table. The sf1 table is trained by
     #   python tools/train_bpe.py \
-    #     '/root/repo/.tmp/sf1/documents.parquet/*.parquet' 4096 \
+    #     '.tmp/sf1/documents.parquet/*.parquet' 4096 \
     #     .../functions/bpe_merges_sf1.json
     # and SATURATES at 383 merges: the synthetic fixture vocabulary
     # (310 distinct [a-z0-9] words) stops yielding pairs that occur

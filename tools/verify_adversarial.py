@@ -4,6 +4,7 @@ candidate-count readouts (VERDICT r8 next #2). Prints one line per
 stage; the numbers land in SCALE.md.
 
 Usage: python tools/verify_adversarial.py [adversarial_dir]
+       (default: <tables.STATE_ROOT>/adversarial)
 """
 
 from __future__ import annotations
@@ -38,9 +39,14 @@ def main() -> None:
         _shingles,
     )
     from batch_processing_etl_orchestration_spark.session import get_spark
-    from batch_processing_etl_orchestration_spark.tables import load_table
+    from batch_processing_etl_orchestration_spark.tables import (
+        STATE_ROOT,
+        load_table,
+    )
 
-    adv = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.tmp/adversarial"
+    adv = sys.argv[1] if len(sys.argv) > 1 else os.path.join(
+        STATE_ROOT, "adversarial"
+    )
     spark = get_spark(
         "verify-adversarial",
         master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",

@@ -45,10 +45,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from batch_processing_etl_orchestration_spark.session import get_spark
-from batch_processing_etl_orchestration_spark.tables import load_table
+from batch_processing_etl_orchestration_spark.tables import STATE_ROOT, load_table
 
 SRC = "/root/testdata/sf0.1"
-SF1 = "/root/repo/.tmp/sf1"
+SF1 = os.path.join(STATE_ROOT, "sf1")
 
 _FAILURES: list[str] = []
 
