@@ -15,18 +15,22 @@ cluster. Everything below is plain public Spark configuration:
   (OpenMeteoWeatherPipelineHourlyData.py:67-68).
 - shuffle.partitions sized for local[32] test runs; on a real cluster
   AQE coalescing makes the static number mostly irrelevant.
-- Driver JIT policy (`-XX:CICompilerCount=2 -XX:Tier4LoadFeedback=2`):
-  one C1 and one C2 compiler thread, and tier-4 thresholds scaled by
-  the C2 queue length (queue / (2 x 1 thread) + 1; the JVM default
-  on 4 cores is queue / (3 x 2 threads) + 1). A once-a-day batch
-  starts in a cold JVM whose C2 queue floods with Spark's fixed code
-  (Janino, Java serialization, the SQL parser), so lukewarm methods
-  stay in C1; once the queue drains the thresholds are the defaults
-  again and hot loops still reach C2. It is
+- Driver JIT policy (`driver_jit_opts`) for hosts under 8 processors
+  (`os.cpu_count()`): `-XX:CICompilerCount=2 -XX:Tier4LoadFeedback=2`,
+  one C1 and one C2 compiler thread (not 1 + 2 on 4 cores) and tier-4
+  thresholds scaled by the C2 queue length (queue / (2 x 1) + 1, not
+  queue / (3 x 2) + 1). A once-a-day batch starts in a cold JVM whose
+  C2 queue floods with Spark's fixed code (Janino, Java serialization,
+  the SQL parser), so lukewarm methods stay in C1; once the queue
+  drains the thresholds are the defaults again and hot loops still
+  reach C2. From 8 processors up HotSpot runs more compiler threads
+  (1 + 3 on 8, 5 + 10 on 32), and two in all would cut C2 (from 16 up
+  C1 too) further than has been measured on such a host, so larger
+  hosts keep the JVM defaults. It is
   `spark.driver.defaultJavaOptions`, which Spark puts ahead of a
   caller's `extraJavaOptions`; a caller's own
-  `spark.driver.defaultJavaOptions` replaces it. It does not apply to
-  a driver JVM already launched by `spark-submit`, nor to cluster
+  `spark.driver.defaultJavaOptions` replaces it. It does not apply to a
+  driver JVM already launched by `spark-submit`, nor to cluster
   executors, which keep the JVM defaults.
 """
 
@@ -36,7 +40,13 @@ import os
 
 from pyspark.sql import SparkSession
 
-_DRIVER_JIT_OPTS = "-XX:CICompilerCount=2 -XX:Tier4LoadFeedback=2"
+
+def driver_jit_opts(cpus: int) -> str | None:
+    """The driver JVM's JIT options on a host with ``cpus`` processors, or
+    None where the JVM defaults stand: under 8 processors HotSpot's own
+    default is one C1 and at most two C2 threads, and two compiler
+    threads in all take C2 threads only."""
+    return "-XX:CICompilerCount=2 -XX:Tier4LoadFeedback=2" if cpus < 8 else None
 
 
 def get_spark(
@@ -65,8 +75,10 @@ def get_spark(
         # rebuilt as TIMESTAMP_NTZ by the loader (tables.load_table) —
         # set once here, never toggled per-read.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.defaultJavaOptions", _DRIVER_JIT_OPTS)
     )
+    jit_opts = driver_jit_opts(os.cpu_count() or 1)
+    if jit_opts:
+        builder = builder.config("spark.driver.defaultJavaOptions", jit_opts)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
