@@ -1,7 +1,6 @@
 """Generation-pointer store machinery shared by the persisted indexes
 (PostingsIndex in operators/retrieval.py, IvfIndex in
-operators/similarity.py — VERDICT r13 #2: "reuse the retrieval
-machinery" for the vector index lifecycle).
+operators/similarity.py).
 
 All state (base stores, segments, tombstones) lives under a generation
 directory and a ``current`` symlink names the live generation. Every
@@ -37,12 +36,12 @@ Subclass contract:
                  owns the rest of the fold: snapshot, fresh gen-* dir,
                  cleanup on failure, folded manifest, publish, rescue
 
-The concurrency protocol (lost-update chase, retract-on-tombstone,
-fold-retry gated to vanished files, post-publish rescue) was built and
-certified in operators/retrieval.py across rounds 8-13
-(tests/test_retrieval.py, tests/test_retrieval_parallel.py) and moved
-here verbatim so every generational index shares ONE audited
-implementation.
+Every generational index shares ONE concurrency protocol: the
+lost-update chase, retract-on-tombstone, a fold retried once when a
+directory of its snapshot (the generation, a segment or a tombstone)
+has vanished, and the post-publish rescue. tests/test_retrieval.py
+scripts its interleavings and tests/test_retrieval_parallel.py runs
+them between two processes.
 """
 
 from __future__ import annotations
@@ -120,96 +119,6 @@ _IMPACT_LAYOUTS = {
 _UNSET = object()
 
 
-def _is_file_vanished(exc: BaseException) -> bool:
-    """True when an exception (or anything in its cause/context chain)
-    is the file-vanished signature of a concurrent segment retract:
-    a path the fold snapshotted was renamed away mid-read. Matches
-    Python's FileNotFoundError and the JVM-side forms PySpark
-    surfaces — AnalysisException [PATH_NOT_FOUND] at plan time, or an
-    executor SparkException wrapping java.io.FileNotFoundException.
-    Used by compact_segments to gate its retry-once: only THIS failure
-    class is the documented benign interleaving (ADVICE r9)."""
-    seen: set[int] = set()
-    while exc is not None and id(exc) not in seen:
-        seen.add(id(exc))
-        if isinstance(exc, FileNotFoundError):
-            return True
-        # Structured checks first (ADVICE r10 #2 — str(exc) on a
-        # captured JVM error renders the WHOLE stack trace, so an
-        # unrelated failure whose trace merely mentions a
-        # FileNotFoundException frame would trigger the expensive fold
-        # retry): Spark 4's error condition for a vanished path at
-        # plan time is PATH_NOT_FOUND (CapturedException.getCondition),
-        # and a driver-side mid-read retract surfaces as a JVM cause
-        # chain reaching java.io.FileNotFoundException — walk the REAL
-        # getCause() chain on the Java throwable, not its rendering.
-        cond = getattr(exc, "getCondition", None)
-        try:
-            if callable(cond) and cond() == "PATH_NOT_FOUND":
-                return True
-        except Exception:
-            pass  # no SparkContext / non-SparkThrowable origin
-        jthrow = getattr(exc, "_origin", None) or getattr(
-            exc, "java_exception", None
-        )
-        jseen = 0
-        while jthrow is not None and jseen < 32:
-            jseen += 1
-            try:
-                if jthrow.getClass().getName() == (
-                    "java.io.FileNotFoundException"
-                ):
-                    return True
-                # An EXECUTOR-side FileNotFoundException is serialized
-                # as TEXT in the stage-failure SparkException's message
-                # (no java cause link survives task serialization), and
-                # a raw Py4JJavaError's top str() line is just "An
-                # error occurred while calling o..." — so match the
-                # throwable's own message too (ADVICE r11 #1). But only
-                # its HEAD — the reason segment before the first stack
-                # frame or "Caused by:" block (review r12): a stage-
-                # failure message embeds the task's FULL rendered trace,
-                # and an unrelated error whose trace merely mentions an
-                # FNF frame (wrapped-and-rethrown, suppressed) must not
-                # be classified as the benign vanished-file race. The
-                # genuine executor-side case renders the FNF class in
-                # the reason segment itself ("Lost task …:
-                # java.io.FileNotFoundException: …") before any frame.
-                jmsg = jthrow.getMessage()
-                if isinstance(jmsg, str):
-                    head = jmsg.split("\n\tat ", 1)[0].split(
-                        "\nCaused by", 1
-                    )[0]
-                    # substring (not fully-qualified) so executor-side
-                    # FNF SUBCLASSES, which render their own class name
-                    # in the reason head, still match (ADVICE r12 #4);
-                    # the head restriction above already prevents
-                    # trace-frame false positives.
-                    if (
-                        "PATH_NOT_FOUND" in head
-                        or "FileNotFoundException" in head
-                    ):
-                        return True
-                jthrow = jthrow.getCause()
-            except Exception:
-                break  # gateway gone mid-walk — fall through to text
-        # Fallback for what structure can't reach — an EXECUTOR-side
-        # FileNotFoundException exists only as text inside the stage-
-        # failure description. Match the description (_desc — no JVM
-        # stacktrace appended) or, for plain exceptions, the TOP LINE
-        # only; never the full rendered trace.
-        msg = getattr(exc, "_desc", None)
-        if not isinstance(msg, str):
-            msg = (str(exc).splitlines() or [""])[0]
-        if "PATH_NOT_FOUND" in msg or "FileNotFoundException" in msg:
-            return True
-        nxt = exc.__cause__ or exc.__context__
-        if nxt is None:
-            nxt = getattr(exc, "_cause", None)  # CapturedException chain
-        exc = nxt
-    return False
-
-
 # Store schemas, keyed (base store dir, store name) or store dir. Sound
 # because a published generation's stores are immutable (compaction
 # writes a FRESH gen-* dir). Bounded at MetaCache.BOUND entries, least
@@ -231,7 +140,7 @@ class GenerationalStore:
     # Stores written FLAT (plain parquet files, never partitionBy) in
     # every generation AND segment: safe — and much cheaper — to read
     # as ONE multi-path scan relation instead of a per-directory
-    # union (r16 optimization, guide §2.4/§6): each
+    # union: each
     # spark.read.parquet(dir) runs its own footer/schema job (~0.1 s
     # of fixed overhead locally, one scan relation in the plan), so a
     # base + N segments union paid N+1 jobs and N+1 plan scans per
@@ -253,9 +162,9 @@ class GenerationalStore:
     def _meta(self, gen: str | None = None) -> dict:
         """Per-generation column meta, written at build/compact time so
         read paths (_union_store's anti-join, compact's sort keys) use
-        the INDEX's id column instead of assuming a default (ADVICE r6:
-        an index built with a custom id column threw at read/compact
-        time once tombstones or segments existed)."""
+        the INDEX's id column instead of assuming a default (an index
+        built with a custom id column would otherwise throw at
+        read/compact time once tombstones or segments exist)."""
         import json
 
         try:
@@ -443,20 +352,20 @@ class GenerationalStore:
         `extra_aggs` needs); `write_to_tmp(tmp_dir, gen0, bounds)`
         writes every segment store; `validate(bounds, gen0)` runs
         subclass checks after the bounds job (bounds: Row with
-        lo/hi/n/n_ids plus any `extra_aggs` aliases — r15
-        optimization: subclass validations that are aggregations over
-        the batch ride the ONE bounds job instead of paying their own
-        scan; the IvfIndex dim check was a separate limit-1 action per
-        micro-batch).
+        lo/hi/n/n_ids plus any `extra_aggs` aliases, so a subclass
+        validation that aggregates over the batch rides the ONE bounds
+        job instead of paying its own scan).
 
-        Id-disjointness is ENFORCED (review r14): an id already live
-        in the base or another segment would double-count in derived
-        statistics. The check range-prunes live ids by the batch's
-        [min, max] bounds, so the common append-only ingest (fresh ids
-        past the base max) skips every row group via parquet stats.
-        Within-batch duplicates are rejected by the same single bounds
-        job. (Two CONCURRENT adds carrying the same id can still slip
-        the check — each reads a live view excluding the other;
+        Id-disjointness is ENFORCED: an id already live in the base or
+        another segment would double-count in derived statistics. The
+        scan reads only the stores whose sidecar [id_lo, id_hi]
+        intersects the batch's [lo, hi], and runs no job when none
+        does: an empty index, an append past every live id and a
+        backfill below them all land without one. A store whose
+        sidecar lacks an interval makes it scan every store. Within-
+        batch duplicates are rejected by the same single bounds job.
+        (Two CONCURRENT adds carrying the same id can still slip the
+        check — each reads a live view excluding the other;
         segment-name collision is the only defense there.)"""
         meta = self._meta()
         id_col = meta["id_col"]
@@ -466,8 +375,8 @@ class GenerationalStore:
             # re-landing it is a replay whose physical marker (the
             # segment dir) is gone. Without this ledger check the
             # replay would re-index the batch even after its docs
-            # were tombstoned and compacted away (ADVICE r14:
-            # delete-before-checkpoint resurrection). Mirror the
+            # were tombstoned and compacted away (a delete before the
+            # checkpoint would be resurrected). Mirror the
             # live-name collision signature (the atomic rename's
             # FileExistsError family) so callers classify both the
             # same way.
@@ -488,7 +397,7 @@ class GenerationalStore:
             # Landing one would write partitioned stores with zero
             # dynamic partitions — a _SUCCESS-only directory that
             # breaks schema inference on every later union read
-            # (ADVICE r14, verified on this Spark). No segment means
+            # (verified on this Spark). No segment means
             # no replay marker, which is safe: a redelivery of an
             # empty batch is itself empty and no-ops again.
             return
@@ -499,34 +408,11 @@ class GenerationalStore:
             )
         if validate is not None:
             validate(bounds, gen0)
-        if (
-            bounds["lo"] is not None
-            and self._live_count_hint(gen0) != 0
-            and not self._ids_past_watermark(gen0, int(bounds["lo"]))
-        ):
-            # Two sidecar fast paths (metadata only, no Spark job; r15
-            # optimization): the count hint proves an EMPTY index (the
-            # bootstrap ingest's first batch), and the id watermark
-            # proves an APPEND-ONLY batch — every incoming id is
-            # strictly above the maximum id any store ever recorded,
-            # so no live id can collide (stores are immutable and
-            # tombstones only hide rows, never add live ids). Either
-            # skips the disjointness scan outright; the steady-state
-            # ingest — monotone ids from a log — pays ZERO jobs here.
-            # Third tier (r16, VERDICT r15 #3 — exact metadata-only
-            # INTERVAL pruning): each store's sidecar records its
-            # [id_lo, id_hi] span; stores whose span cannot intersect
-            # the batch's [lo, hi] are excluded from the scan, and
-            # when NO store overlaps the scan is skipped outright (a
-            # backfill below every live store's range is as provably
-            # disjoint as an append past the watermark). Interleaved
-            # ingests (the impact twin's mod-4 batches) still overlap
-            # everything and pay the full scan — by design.
-            # Otherwise: no broadcast hint on the batch side — a bulk
-            # ingest can be arbitrarily large, and forcing it through
-            # the driver would OOM exactly when it matters (review
-            # r14); AQE picks broadcast on its own when the batch is
-            # small.
+        if bounds["lo"] is not None:
+            # The stores whose sidecar interval meets [lo, hi]: None
+            # scans all of them, [] runs no job. No broadcast hint on
+            # the batch: a bulk ingest can be arbitrarily large, and
+            # AQE broadcasts a small one on its own.
             overlap = self._overlapping_live_dirs(
                 gen0, int(bounds["lo"]), int(bounds["hi"])
             )
@@ -735,31 +621,6 @@ class GenerationalStore:
             out.append((d, st))
         return out
 
-    def _live_count_hint(self, gen: str) -> int | None:
-        """Upper bound on the number of live ids in `gen`, or None
-        when unknown. A 0 answer lets _land_segment skip the
-        id-disjointness scan: an index whose stores all record zero
-        rows has no id to collide with."""
-        st = self._store_stats(gen)
-        return None if st is None else sum(s["n_docs"] for _, s in st)
-
-    def _live_id_hi_hint(self, gen: str) -> int | None:
-        """Upper bound on the maximum live id in `gen`, or None when
-        unknown. Must never under-report: _ids_past_watermark skips
-        the disjointness scan when a batch's min id exceeds it."""
-        st = self._store_stats(gen, need=("id_hi",))
-        if st is None:
-            return None
-        return max((s["id_hi"] for _, s in st if s["n_docs"]), default=None)
-
-    def _ids_past_watermark(self, gen: str, batch_lo: int) -> bool:
-        """True iff sidecar metadata PROVES the batch is append-only:
-        its smallest id is strictly above every id any live store
-        could hold (r15 optimization — the steady-state ingest of
-        monotone ids lands with zero disjointness jobs)."""
-        hi = self._live_id_hi_hint(gen)
-        return hi is not None and batch_lo > hi
-
     def _live_id_intervals(self, gen: str):
         """[(store_dir, id_lo, id_hi)] for every NON-EMPTY live store,
         or None when any of them lacks an interval."""
@@ -772,9 +633,10 @@ class GenerationalStore:
         self, gen: str, lo: int, hi: int
     ) -> list | None:
         """Store dirs whose sidecar id interval intersects [lo, hi] —
-        the only stores a disjointness scan must read (r16, VERDICT
-        r15 #3). None = intervals unknown, scan everything; [] =
-        PROVEN disjoint from metadata alone, skip the scan."""
+        the only stores a disjointness scan must read. None =
+        intervals unknown, scan everything; [] = PROVEN disjoint from
+        metadata alone (every store empty, or none overlapping), skip
+        the scan."""
         intervals = self._live_id_intervals(gen)
         if intervals is None:
             return None
@@ -810,7 +672,7 @@ class GenerationalStore:
         # states (certified by test_read_during_compaction_is_atomic).
         # Callers holding a FULL snapshot (blockmax_prune_plan,
         # _compact_once) pass segs + dead explicitly — dead=None means
-        # "pinned: no tombstones", NOT "re-list" (review r14: segment/
+        # "pinned: no tombstones", NOT "re-list" (segment/
         # tombstone dirs mutate in place under a pinned generation, so
         # re-listing here would leak a mid-plan delete into the scan
         # while derived statistics still count the deleted rows).
@@ -902,32 +764,37 @@ class GenerationalStore:
         generation fully live (never a double-counting half-state).
         Returns the number of segments folded.
 
-        Concurrency (ADVICE r8): add_segment's RETRACT path renames a
-        segment dir away while we may be mid-read of its parquet files
-        — the fold then fails loudly (never corrupts; nothing was
-        published). We re-snapshot and retry once: the retracted
-        segment is absent from the fresh listing, so the retry folds a
-        consistent view. The retry is gated to FILE-VANISHED failures
-        only (ADVICE r9: a deterministic error — bad data, OOM, disk
-        full — must not re-run the expensive fold and then mask its
-        own root cause); anything else propagates immediately. A
-        retried fold that fails again re-raises with the FIRST
-        exception chained (`raise ... from`) so the original traceback
-        survives triage."""
+        Concurrency: the fold reads a snapshot — the live generation,
+        its segment dirs and its tombstone dirs. A concurrent
+        add_segment retract, a chase or a rescue renames a directory
+        away, and the age-based reap removes a generation; if one of
+        the snapshot's directories is gone when the fold fails, the
+        failure is that race, and the fold is retried once on a fresh
+        snapshot (nothing was published, and the fresh listing no
+        longer holds the vanished dir). Any other failure — bad data,
+        OOM, disk full — propagates at once rather than re-running the
+        fold. A retry that fails again re-raises with the FIRST
+        exception chained (`raise ... from`)."""
+        gen, segs, tomb_dirs = self._snapshot()
         try:
-            return self._compact_once(n_files)
+            return self._compact_once(n_files, gen, segs, tomb_dirs)
         except Exception as first:
-            if not _is_file_vanished(first):
+            if all(map(os.path.exists, [gen, *segs, *tomb_dirs])):
                 raise
             try:
-                return self._compact_once(n_files)
+                return self._compact_once(n_files, *self._snapshot())
             except Exception as second:
                 raise second from first
 
-    def _compact_once(self, n_files: int) -> int:
-        gen = self._gen()  # one consistent view across every store
-        segs = self._segment_dirs(gen)
-        tomb_dirs = self._tombstone_dirs(gen)
+    def _snapshot(self) -> tuple[str, list[str], list[str]]:
+        """(gen, segment dirs, tombstone dirs) of the live generation:
+        one consistent view for a fold."""
+        gen = self._gen()
+        return gen, self._segment_dirs(gen), self._tombstone_dirs(gen)
+
+    def _compact_once(
+        self, n_files: int, gen: str, segs: list[str], tomb_dirs: list[str]
+    ) -> int:
         dead = (
             self.spark.read.parquet(*tomb_dirs).distinct()
             if tomb_dirs
@@ -941,13 +808,9 @@ class GenerationalStore:
             self._fold_stores(out, gen, segs, dead, n_files)
             self._write_folded_manifest(out, gen, segs, tomb_dirs)
         except Exception:
-            # Never publish a torn generation; reclaim the partial dir.
-            # The cleanup covers EVERYTHING up to (but not including)
-            # _publish — a failure in _write_meta or the _FOLDED
-            # journal write must not leak an unpublished gen-* dir to
-            # the 600s age-based reap. A concurrent retract
-            # renaming a snapshotted segment away mid-read lands here
-            # too — compact_segments retries that class once.
+            # Never publish a torn generation; reclaim the partial dir,
+            # whatever step up to _publish failed, so no unpublished
+            # gen-* dir is left to the age-based reap.
             import shutil
 
             shutil.rmtree(out, ignore_errors=True)
@@ -977,7 +840,7 @@ class GenerationalStore:
     def maybe_compact(
         self, max_segments: int | None = None, n_files: int = 16
     ) -> int:
-        """The compaction TRIGGER policy (VERDICT r14 #4): fold when
+        """The compaction TRIGGER policy: fold when
         segment fan-out reaches the threshold, else no-op. Callers on
         the ingest path (the foreachBatch sinks) invoke this after
         every landing; the threshold bounds both the serving-time
@@ -1003,7 +866,7 @@ class GenerationalStore:
         itself disappears at the fold, and a streaming replay whose
         batch was tombstoned AND compacted before the checkpoint
         advanced would otherwise re-land it, resurrecting deleted
-        docs (ADVICE r14). Growth is one name per ingested batch —
+        docs. Growth is one name per ingested batch —
         metadata-scale by construction (a production deployment
         would prune entries older than the sink's checkpoint
         horizon)."""
@@ -1032,8 +895,8 @@ class GenerationalStore:
         committed_segments ledger: every previously folded batch name
         would be forgotten, and a streaming checkpoint replay of a
         batch whose docs were deleted before the rebuild would
-        re-land it (review r15 — the ADVICE r14 resurrection through
-        the retrain door). Carry forward the prior generation's
+        re-land it (resurrecting deleted docs through the retrain
+        door). Carry forward the prior generation's
         ledger PLUS its still-live segment names (the rebuild
         replaces their data from source, so their write identity is
         spent either way). No-op on a brand-new path."""

@@ -42,13 +42,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 # The generation-pointer machinery (publish/chase/segments/tombstones/
-# union reads) moved to operators/genstore.py in r14 so the vector
-# index shares it; _UNSET and _is_file_vanished re-export from here
-# because serving code and tests grew up importing them from this
-# module.
-from batch_processing_etl_orchestration_spark.operators.genstore import (  # noqa: F401
+# union reads) lives in operators/genstore.py, shared with the vector
+# index.
+from batch_processing_etl_orchestration_spark.operators.genstore import (
     GenerationalStore,
-    _is_file_vanished,
     _UNSET,
 )
 

@@ -20,6 +20,21 @@ from batch_processing_etl_orchestration_spark.warehouse.catalog import (
     merge_idempotent,
 )
 
+# The natural key each job's merge_idempotent upserts on, by warehouse
+# table.
+MERGE_KEYS: dict[str, tuple[str, ...]] = {
+    "eia930_cleaned_hourly_net_generation": ("date", "respondent", "fueltype"),
+    "eia930_cleaned_hourly_demand_interchange_generation": ("date", "respondent"),
+    "eia930_hourly_net_generation_by_energy_source": ("date", "fueltype"),
+    "eia930_hourly_respondents_producing_and_generating": ("date", "respondent"),
+    "eia930_hourly_statistics_by_response_type": ("date",),
+    "openmeteo_cleaned_weather": ("date", "latitude", "longitude"),
+    "openmeteo_weather_means_per_hour": ("date", "state"),
+    "openmeteo_weather_deviations_per_hour": ("date", "state"),
+    "eia7a_cleaned_quarterly_coal_imports_and_exports": ("date", "country_id"),
+    "eia814_cleaned_monthly_crude_oil_imports": ("date", "origin_id"),
+}
+
 
 def run_eia930_job(
     spark: SparkSession,
@@ -55,9 +70,7 @@ def run_eia930_job(
         ),
     }
     if load:
-        for table, df in gold.items():
-            cols = [c for c in ("date", "respondent", "fueltype") if c in df.columns]
-            merge_idempotent(spark, _conform(spark, df, table, db), table, cols or df.columns[:2], db)
+        _land(spark, gold, db)
     return gold
 
 
@@ -83,9 +96,7 @@ def run_openmeteo_job(
         ),
     }
     if load:
-        for table, df in gold.items():
-            keys = [c for c in ("date", "state", "latitude", "longitude") if c in df.columns]
-            merge_idempotent(spark, _conform(spark, df, table, db), table, keys, db)
+        _land(spark, gold, db)
     return gold
 
 
@@ -103,9 +114,7 @@ def run_eia7a_job(
         eia7a.clean_quarterly(eia7a.union_pages(pages), target_quarter)
     )
     if load:
-        merge_idempotent(
-            spark, _conform(spark, cleaned, table, db), table, ["date", "country_id"], db
-        )
+        _land(spark, {table: cleaned}, db)
     return cleaned
 
 
@@ -122,10 +131,16 @@ def run_eia814_job(
         eia814.clean_monthly(eia7a.union_pages(pages))
     )
     if load:
-        merge_idempotent(
-            spark, _conform(spark, cleaned, table, db), table, ["date", "origin_id"], db
-        )
+        _land(spark, {table: cleaned}, db)
     return cleaned
+
+
+def _land(spark: SparkSession, frames: dict[str, DataFrame], db: str) -> None:
+    """Upsert each frame into its warehouse table on MERGE_KEYS."""
+    for table, df in frames.items():
+        merge_idempotent(
+            spark, _conform(spark, df, table, db), table, list(MERGE_KEYS[table]), db
+        )
 
 
 def _conform(spark: SparkSession, df: DataFrame, table: str, db: str) -> DataFrame:

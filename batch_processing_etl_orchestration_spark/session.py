@@ -6,6 +6,8 @@ cluster. Everything below is plain public Spark configuration:
 
 - AQE on (runtime re-planning, skew-join splitting, partition
   coalescing) — replaces the reference's absent optimizer (SURVEY §4).
+  It is Spark's default, so no conf sets it; nor is any other conf
+  set to its default value.
 - ANSI off: the reference's core cleaning semantic is null-on-error
   coercion (pd.to_numeric(..., errors='coerce'),
   EIA930PipelineHourlyData.py:114) — non-ANSI Spark casts match it.
@@ -59,9 +61,6 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.ansi.enabled", "false")
@@ -69,7 +68,6 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # Engine-wide convention: parquet INT64 TIMESTAMP(NANOS) columns
         # (events.ts in the fixtures) are read as epoch-nanos longs and
         # rebuilt as TIMESTAMP_NTZ by the loader (tables.load_table) —

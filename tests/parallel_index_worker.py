@@ -78,14 +78,12 @@ def main() -> None:
             results.append({"op": op, "ok": True, "error": None})
             return True
         except Exception as exc:  # clean failure: a legitimate outcome
-            # Record the vanished-file signature too (ADVICE r12 #1):
+            # Record the vanished-file signature too:
             # the parent accepts a JVM-rendered loser ONLY when the
             # error structurally matches a concurrently-retracted
             # segment — a non-corrupting protocol crash (NPE, OOM)
             # must fail the stress test, not pass as a race loser.
-            from batch_processing_etl_orchestration_spark.operators.retrieval import (  # noqa: E501
-                _is_file_vanished,
-            )
+            from jvm_errors import _is_file_vanished
 
             results.append(
                 {"op": op, "ok": False,

@@ -133,3 +133,27 @@ def test_openmeteo_materialize_and_metrics(spark):
     h0s = [r for r in stds if r["date"].hour == 0][0]
     # sample std (ddof=1) of [1,2] = sqrt(0.5)
     assert math.isclose(h0s["temp"], round(math.sqrt(0.5), 6), abs_tol=1e-9)
+
+
+def test_merge_keys_cover_every_landed_table():
+    """Spark-free: every warehouse table a job function names has a
+    MERGE_KEYS entry, and every key column is a column of that table."""
+    import ast
+    import inspect
+
+    from batch_processing_etl_orchestration_spark.pipelines import jobs
+    from batch_processing_etl_orchestration_spark.warehouse.catalog import (
+        WAREHOUSE_SCHEMAS,
+    )
+
+    landed = {
+        node.value
+        for name, fn in vars(jobs).items()
+        if name.startswith("run_") and callable(fn)
+        for node in ast.walk(ast.parse(inspect.getsource(fn)))
+        if isinstance(node, ast.Constant) and node.value in WAREHOUSE_SCHEMAS
+    }
+    assert len(landed) == 10
+    assert landed == set(jobs.MERGE_KEYS)
+    for table, keys in jobs.MERGE_KEYS.items():
+        assert keys and set(keys) <= set(WAREHOUSE_SCHEMAS[table]), table

@@ -28,6 +28,12 @@ FOLD_JOBS = 13
 # computes its block offsets from one collected histogram.
 IMPACT_FOLD_JOBS = 29
 IVF_FOLD_JOBS = 12
+# Upper bound on the Spark jobs of an append-only add_segment onto a
+# folded PostingsIndex (test_append_landing_on_folded_index_jobs), the
+# shape of every landing in a stream that folds each segment, as
+# measured: the sidecar intervals prove the batch disjoint, so the
+# landing never reads the live ids.
+LANDING_JOBS = 17
 
 
 @pytest.fixture(scope="module")
@@ -245,6 +251,40 @@ def test_segment_add_then_compact_equivalence(spark, tmp_path, count_jobs):
     assert _sidecar(seg) == _sidecar(mono) == {
         "n_docs": 4, "total_dl": 12, "id_lo": 1, "id_hi": 4,
     }
+
+
+def test_append_landing_on_folded_index_jobs(
+    spark, tmp_path, count_jobs, monkeypatch
+):
+    """An append-only landing onto a folded index runs at most
+    LANDING_JOBS Spark jobs and never builds the live-id scan (a rise
+    fails here, not at benchmark time)."""
+    idx = PostingsIndex.build(
+        spark,
+        spark.createDataFrame(
+            [(1, "hash join scan"), (2, "scan scan filter")],
+            "doc_id BIGINT, text STRING",
+        ),
+        str(tmp_path / "idx"),
+    )
+    idx.add_segment(
+        spark.createDataFrame([(3, "join hash")], "doc_id BIGINT, text STRING"),
+        "b1",
+    )
+    assert idx.compact_segments() == 1
+
+    def no_scan(*args, **kw):
+        raise AssertionError("append-only landing read the live ids")
+
+    monkeypatch.setattr(PostingsIndex, "_live_ids", no_scan)
+    batch = spark.createDataFrame(
+        [(4, "filter merge sort"), (5, "hash scan")],
+        "doc_id BIGINT, text STRING",
+    )
+    _, n_jobs = count_jobs(lambda: idx.add_segment(batch, "b2"))
+    assert n_jobs <= LANDING_JOBS, n_jobs
+    monkeypatch.undo()
+    assert {r["doc_id"] for r in idx.doclens().collect()} == {1, 2, 3, 4, 5}
 
 
 @pytest.fixture
@@ -827,17 +867,12 @@ def test_compaction_rescues_segment_landed_during_fold(
 
 
 def test_compact_retries_once_on_vanished_segment(spark, tmp_path):
-    """ADVICE r8: a concurrent add_segment RETRACT renames a
-    snapshotted segment dir away mid-fold — the first fold attempt
-    fails loudly, and compact_segments must re-snapshot and retry once
-    (the retracted segment is absent from the fresh listing), leaving
-    a consistent published generation and no torn partial dir."""
-    import os
-
-    from batch_processing_etl_orchestration_spark.operators.retrieval import (
-        PostingsIndex,
-    )
-
+    """A concurrent add_segment RETRACT renames a snapshotted segment
+    dir away mid-fold: the first fold attempt fails loudly, and since
+    a directory of its snapshot is gone, compact_segments re-snapshots
+    and retries once — the retracted segment is absent from the fresh
+    listing, so the retry folds the other one, and the failed attempt
+    leaves no partial generation."""
     idx = PostingsIndex.build(
         spark,
         spark.createDataFrame(
@@ -846,43 +881,80 @@ def test_compact_retries_once_on_vanished_segment(spark, tmp_path):
         ),
         str(tmp_path / "idx"),
     )
-    idx.add_segment(
-        spark.createDataFrame([(3, "join hash")], "doc_id BIGINT, text STRING"),
-        name="seg-a",
-    )
+    for name, doc in (("seg-a", (3, "join hash")), ("seg-b", (4, "hash"))):
+        idx.add_segment(
+            spark.createDataFrame([doc], "doc_id BIGINT, text STRING"), name
+        )
 
-    calls = {"n": 0}
-    orig = idx._union_store
+    calls = {"union": 0, "fold": 0}
+    orig_union, orig_fold = idx._union_store, idx._fold_stores
+    seg_root = os.path.join(idx._gen(), "segments")
 
-    def flaky(store, **kw):
-        if calls["n"] == 0:
-            calls["n"] += 1
-            raise FileNotFoundError("segment renamed away mid-read")
-        return orig(store, **kw)
+    def retracting(store, **kw):
+        if calls["union"] == 0:  # what a retract does: one rename
+            os.rename(
+                os.path.join(seg_root, "seg-a"),
+                os.path.join(seg_root, "_tmp-retract-test"),
+            )
+        calls["union"] += 1
+        return orig_union(store, **kw)
 
-    idx._union_store = flaky
-    assert idx.compact_segments() == 1  # retried and folded seg-a
-    idx._union_store = orig
+    def counted(*args):
+        calls["fold"] += 1
+        return orig_fold(*args)
+
+    idx._union_store, idx._fold_stores = retracting, counted
+    assert idx.compact_segments() == 1  # retried and folded seg-b only
+    idx._union_store, idx._fold_stores = orig_union, orig_fold
+    assert calls["fold"] == 2  # the first fold failed and was retried
     # exactly two generations remain: the retired base and the
     # published fold — the failed first attempt left no partial dir
     gens = [d for d in os.listdir(idx.path) if d.startswith("gen-")]
     assert len(gens) == 2, sorted(gens)
-    assert calls["n"] == 1  # the failure happened and was retried
-    # the folded index still serves both batches
+    # the folded index serves the base and seg-b
     got = {
         r["doc_id"]
         for r in idx.postings().where("word = 'hash'").collect()
     }
-    assert got == {1, 3}
+    assert got == {1, 4}
+    assert {r["doc_id"] for r in idx.doclens().collect()} == {1, 2, 4}
+
+
+def test_compact_no_retry_when_snapshot_intact(spark, tmp_path):
+    """A fold failure with every snapshotted directory still in place
+    is not the retract race, whatever its class: it propagates after
+    ONE fold attempt (a FileNotFoundError included) and leaves no
+    stray generation."""
+    idx = PostingsIndex.build(
+        spark,
+        spark.createDataFrame(
+            [(1, "hash join scan")], "doc_id BIGINT, text STRING"
+        ),
+        str(tmp_path / "idx"),
+    )
+    idx.add_segment(
+        spark.createDataFrame([(2, "join")], "doc_id BIGINT, text STRING"),
+        "seg-a",
+    )
+    calls = []
+
+    def failing(*args):
+        calls.append(args)
+        raise FileNotFoundError("not a vanished snapshot dir")
+
+    idx._fold_stores = failing
+    with pytest.raises(FileNotFoundError, match="not a vanished"):
+        idx.compact_segments()
+    assert len(calls) == 1
+    gens = [d for d in os.listdir(idx.path) if d.startswith("gen-")]
+    assert len(gens) == 1, sorted(gens)
 
 
 def test_is_file_vanished_gates_retry_classes():
     """compact_segments' retry gate (ADVICE r9): only the two vanished-
     file signatures retry — chained causes are walked, deterministic
     errors are not retried, and cycles in the cause chain terminate."""
-    from batch_processing_etl_orchestration_spark.operators.retrieval import (
-        _is_file_vanished,
-    )
+    from tests.jvm_errors import _is_file_vanished
 
     assert _is_file_vanished(FileNotFoundError("gone"))
     assert _is_file_vanished(
@@ -911,9 +983,7 @@ def test_is_file_vanished_ignores_trace_only_mentions():
     below the top-line message) must NOT gate the retry; structured
     signals (getCondition, a real Java cause chain, or the desc/top
     line) are what count."""
-    from batch_processing_etl_orchestration_spark.operators.retrieval import (
-        _is_file_vanished,
-    )
+    from tests.jvm_errors import _is_file_vanished
 
     # multi-line str(exc) where only a deep frame mentions the class
     deep = RuntimeError(
@@ -974,9 +1044,7 @@ def test_is_file_vanished_matches_stage_failure_message():
     Py4JJavaError's str() top line is 'An error occurred while
     calling o...'. The JVM walk must match the throwable's own
     message; a deterministic executor failure must still not gate."""
-    from batch_processing_etl_orchestration_spark.operators.retrieval import (
-        _is_file_vanished,
-    )
+    from tests.jvm_errors import _is_file_vanished
 
     class FakeJThrow:
         def __init__(self, name, msg, cause=None):
@@ -1032,9 +1100,7 @@ def test_is_file_vanished_jvm_message_head_only():
     not be classified as the vanished-file race, while the genuine
     executor-side FNF (rendered in the reason segment before any
     frame) still gates."""
-    from batch_processing_etl_orchestration_spark.operators.retrieval import (
-        _is_file_vanished,
-    )
+    from tests.jvm_errors import _is_file_vanished
 
     class FakeJThrow:
         def __init__(self, name, msg, cause=None):
@@ -1392,11 +1458,10 @@ def test_add_segment_rejects_live_and_duplicate_ids(spark, tmp_path):
 def test_append_only_watermark_skips_disjointness_scan(
     spark, tmp_path, monkeypatch
 ):
-    """r15 optimization: the _corpus.json id_hi watermark must prove
-    an append-only batch disjoint with ZERO Spark jobs (the scan is
-    never built), fall back to the scan whenever the batch could
-    overlap, and stay conservative when any non-empty store lacks
-    the sidecar key."""
+    """The _corpus.json id intervals must prove an append-only batch
+    disjoint with ZERO Spark jobs (the scan is never built), scan only
+    the stores the batch could overlap, and stay conservative (scan
+    everything) when any non-empty store lacks an interval key."""
     base = spark.createDataFrame(
         [(i, f"join w{i % 3}") for i in range(50)],
         "doc_id BIGINT, text STRING",
@@ -1417,7 +1482,7 @@ def test_append_only_watermark_skips_disjointness_scan(
 
     monkeypatch.setattr(PostingsIndex, "_live_ids", spy)
 
-    # append-only: lo=100 > watermark 49 — no scan
+    # append-only: lo=100 above the base's [0, 49] — no scan
     index.add_segment(
         spark.createDataFrame(
             [(i, "join hash") for i in range(100, 105)],
@@ -1426,11 +1491,13 @@ def test_append_only_watermark_skips_disjointness_scan(
         "wm-append",
     )
     assert calls == []
-    # watermark advanced to the segment's max
-    assert index._live_id_hi_hint(index._gen()) == 104
+    # the segment's sidecar records its own interval
+    assert [
+        (lo, hi) for _, lo, hi in index._live_id_intervals(index._gen())
+    ] == [(0, 49), (100, 104)]
 
     # overlapping the base's [0, 49] interval: scan runs — PRUNED to
-    # the one overlapping store (r16 interval pruning) — and rejects
+    # the one overlapping store — and rejects
     with pytest.raises(ValueError, match="already live"):
         index.add_segment(
             spark.createDataFrame(
@@ -1442,8 +1509,8 @@ def test_append_only_watermark_skips_disjointness_scan(
     assert calls[0] is not None and len(calls[0]) == 1
 
     # gap-filling but disjoint (60 lies between the base's [0, 49] and
-    # the segment's [100, 104]): r16 — intervals PROVE disjointness
-    # from metadata alone, no scan at all (pre-r16 this paid one)
+    # the segment's [100, 104]): the intervals PROVE disjointness
+    # from metadata alone, no scan at all
     index.add_segment(
         spark.createDataFrame(
             [(60, "scan")], "doc_id BIGINT, text STRING"
@@ -1465,14 +1532,13 @@ def test_append_only_watermark_skips_disjointness_scan(
     assert calls[1] is not None and len(calls[1]) == 1
     assert calls[1][0].endswith("wm-append")
 
-    # a non-empty store without the key poisons BOTH hints (watermark
-    # and intervals): conservative full scan (dirs=None)
+    # a non-empty store without the key poisons the intervals:
+    # conservative full scan (dirs=None)
     with open(os.path.join(index._gen(), "_corpus.json")) as f:
         st = json.load(f)
     st.pop("id_hi")
     with open(os.path.join(index._gen(), "_corpus.json"), "w") as f:
         json.dump(st, f)
-    assert index._live_id_hi_hint(index._gen()) is None
     assert index._live_id_intervals(index._gen()) is None
     index.add_segment(
         spark.createDataFrame(

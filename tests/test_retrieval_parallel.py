@@ -24,13 +24,13 @@ ALLOWED_ERRORS = (
     "FileNotFoundError",
     "FileExistsError",
 )
-# JVM-surfaced losers (review r12): a retract that defeats the single
-# retry, or a plan-time read of a just-retracted segment, raises
-# through py4j as Py4JJavaError / AnalysisException instead of a
-# Python builtin. These classes are allowed ONLY with the vanished-
-# file signature the worker records via _is_file_vanished (ADVICE r12
-# #1) — a bare JVM crash (NPE, OOM, corrupt read) in protocol code
-# must FAIL the stress test, not pass as a clean race loser.
+# JVM-surfaced losers: a retract that defeats the single retry, or a
+# plan-time read of a just-retracted segment, raises through py4j as
+# Py4JJavaError / AnalysisException instead of a Python builtin. These
+# classes are allowed ONLY with the vanished-file signature the worker
+# records via tests/jvm_errors.py's _is_file_vanished — a bare JVM
+# crash (NPE, OOM, corrupt read) in protocol code must FAIL the stress
+# test, not pass as a clean race loser.
 JVM_ERRORS_NEED_VANISHED = ("Py4JJavaError", "AnalysisException")
 
 

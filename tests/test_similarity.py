@@ -381,7 +381,7 @@ def test_ivf_lifecycle_segments_tombstones_compact(spark, tmp_path):
 def test_ivf_landing_after_fold_prunes(spark, tmp_path, monkeypatch):
     """A folded IvfIndex generation records its store-stats sidecar
     like a landing does, so the first append-only landing after
-    compact_segments still proves disjointness from the id watermark
+    compact_segments still proves disjointness from the id intervals
     and never scans the live ids."""
     from batch_processing_etl_orchestration_spark.operators.similarity import (
         IvfIndex,
@@ -399,7 +399,7 @@ def test_ivf_landing_after_fold_prunes(spark, tmp_path, monkeypatch):
     folded_hi = c.where(F.col("cand_id") < 350).agg(F.max("cand_id")).first()[0]
     st = idx._read_stats(idx._gen())
     assert st["id_hi"] == folded_hi and st["id_lo"] == 0 and st["n_docs"] > 0
-    assert idx._live_id_hi_hint(idx._gen()) == folded_hi
+    assert idx._live_id_intervals(idx._gen()) == [(idx._gen(), 0, folded_hi)]
 
     calls = []
     orig = IvfIndex._live_ids
