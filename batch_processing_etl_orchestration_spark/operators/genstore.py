@@ -30,11 +30,14 @@ Subclass contract:
   _ID_STORE      the id-keyed store _live_ids reads (add-segment
                  id-disjointness); _ID_STORE_UNIQUE False when it
                  holds an id more than once
-  _META_DEFAULT  meta dict served for generations without _meta.json
+  _META_DEFAULT  meta dict served for generations without _meta.json;
+                 its keys name the meta entries holding a batch's
+                 columns (stream_sink selects them)
   _fold_stores(out, gen, segs, dead, n_files)  writes the folded
                  stores and _meta.json into `out`. compact_segments
                  owns the rest of the fold: snapshot, fresh gen-* dir,
                  cleanup on failure, folded manifest, publish, rescue
+  _open(spark, path)  opens the index (default: the constructor)
 
 Every generational index shares ONE concurrency protocol: the
 lost-update chase, retract-on-tombstone, a fold retried once when a
@@ -125,6 +128,19 @@ _UNSET = object()
 # recently used first out: every landing adds keys, so an unbounded map
 # would grow for as long as an ingest runs. See _read_flat_store.
 _STORE_SCHEMA_CACHE = MetaCache()
+
+
+class IdsAlreadyLive(ValueError):
+    """A landing batch carries ids the index already serves: `n_live`
+    of its `n_ids` distinct ids."""
+
+    def __init__(self, n_live: int, n_ids: int):
+        super().__init__(
+            f"add_segment: {n_live} incoming doc ids are "
+            "already live in the index; re-indexing requires "
+            "delete + compact_segments first"
+        )
+        self.n_live, self.n_ids = n_live, n_ids
 
 
 class GenerationalStore:
@@ -427,11 +443,7 @@ class GenerationalStore:
                     .count()
                 )
                 if n_live:
-                    raise ValueError(
-                        f"add_segment: {n_live} incoming doc ids are "
-                        "already live in the index; re-indexing requires "
-                        "delete + compact_segments first"
-                    )
+                    raise IdsAlreadyLive(n_live, int(bounds["n_ids"]))
         dead = self._tombstones(gen0)
         if dead is not None:
             n_conflicts = (
@@ -851,6 +863,55 @@ class GenerationalStore:
         if len(self._segment_dirs()) < limit:
             return 0
         return self.compact_segments(n_files)
+
+    # -- streaming ingest ------------------------------------------------
+
+    @classmethod
+    def _open(cls, spark: SparkSession, path: str) -> "GenerationalStore":
+        """Open the index at `path` (subclass hook)."""
+        return cls(spark, path)
+
+    @classmethod
+    def stream_sink(cls, path: str):
+        """foreachBatch sink landing each micro-batch as the segment
+        `batch-<batch_id>`: the segment name is the exactly-once
+        marker. The batch's columns are the generation meta's (the
+        keys of _META_DEFAULT). A redelivered batch counts as
+        committed when
+          1. segment_committed(name) holds — the live dir or the
+             folded ledger — checked before the landing's first job;
+          2. the landing finds EVERY batch id already live (a replay
+             of a folded batch under a new id); a partial overlap
+             fails, or the fresh ids would silently vanish;
+          3. an OSError leaves segment_committed(name) true (a
+             concurrent replay landed it first).
+        Anything else fails the stream: swallowing it would advance
+        the checkpoint past a batch that never landed. maybe_compact
+        runs outside the handlers, because after the landing
+        segment_committed(name) holds and a failed fold would be
+        taken for a replay."""
+
+        def ingest(batch_df: DataFrame, batch_id: int) -> None:
+            name = f"batch-{batch_id}"
+            idx = cls._open(batch_df.sparkSession, path)
+            if idx.segment_committed(name):
+                return
+            meta = idx._meta()
+            try:
+                idx.add_segment(
+                    batch_df.select(*(meta[k] for k in cls._META_DEFAULT)),
+                    name,
+                )
+            except IdsAlreadyLive as e:
+                if e.n_live != e.n_ids:
+                    raise
+            except OSError:
+                if idx.segment_committed(name):
+                    return
+                raise
+            idx.maybe_compact()
+
+        return ingest
 
     def _write_folded_manifest(
         self, out: str, gen: str, segs: list[str], tomb_dirs: list[str]

@@ -488,7 +488,7 @@ class PostingsIndex(GenerationalStore):
         text_col: str | None = None,
     ) -> None:
         """Index a NEW batch of documents as a segment. Doc ids must
-        be new — ENFORCED (review r14): an id already live in the base
+        be new — ENFORCED: an id still live in the base
         or another segment would double-count tf and, worse, make the
         two serving paths disagree on df (bm25_topk counts distinct
         doc ids; blockstats sums per-block posting rows), silently

@@ -808,6 +808,10 @@ class IvfIndex(GenerationalStore):
         idx.centroids = idx._centroids()
         return idx
 
+    @classmethod
+    def _open(cls, spark, path: str) -> "IvfIndex":
+        return cls.load(spark, path)
+
     def add_segment(self, new_candidates: DataFrame, name: str) -> None:
         """Incremental index maintenance: assign new vectors against
         the live generation's FROZEN centroids and land them as a

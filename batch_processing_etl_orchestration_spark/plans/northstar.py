@@ -22,8 +22,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from batch_processing_etl_orchestration_spark.plans.registry import register
+from batch_processing_etl_orchestration_spark.streaming.sink import drain_files
 from batch_processing_etl_orchestration_spark.tables import (
-    artifact_schema,
     load_table,
     read_artifact,
 )
@@ -3204,7 +3204,7 @@ def q_stream_index_maintain_impact(
     geometry production serving actually uses. Documents arrive as 4
     deterministic micro-batches (seg = doc_id % 4, one file per
     batch, drained oldest-first via maxFilesPerTrigger=1) through the
-    SAME index_stream_sink exactly-once protocol, landing on an
+    SAME PostingsIndex.stream_sink exactly-once protocol, landing on an
     impact-ordered index bootstrapped EMPTY. Each segment computes
     its own (maxtf DESC, dl ASC) impact histogram and mints blocks in
     a DISJOINT blk range (base = Σ prior stores' spans —
@@ -3274,19 +3274,7 @@ def q_stream_index_maintain_impact(
         path,
         impact_ordered=True,
     )
-    schema = artifact_schema(spark, src)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    sq = (
-        stream.writeStream.foreachBatch(index_stream_sink(path))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    sq.awaitTermination()
+    drain_files(spark, src, PostingsIndex.stream_sink(path), ckpt)
     return _blockmax_report(spark, PostingsIndex(spark, path))
 
 
@@ -5986,19 +5974,7 @@ def q_stream_bpe_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         delta_refresh(spark, delta, spec, mv, commit_token=f"batch_{batch_id}")
 
-    schema = artifact_schema(spark, src)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_files(spark, src, merge, ckpt)
 
     # finalize() serves scaled-long sums as DOUBLE; these are integer
     # token counts well inside 2^53, so the cast back to long is exact
@@ -7136,19 +7112,7 @@ def q_stream_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     head_words, weight_rows, prior6 = _nb_train_capped(spark, docs)
     score = nb_stream_sink(out, head_words, weight_rows, prior6)
-    schema = artifact_schema(spark, src)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(score)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_files(spark, src, score, ckpt)
     return spark.read.parquet(os.path.join(out, "batch_*")).select(
         "doc_id", "n_tokens", "log_odds", "pred_pos"
     )
@@ -7230,77 +7194,6 @@ def nb_score_frozen(
     )
 
 
-def index_stream_sink(path: str):
-    """foreachBatch sink for streaming index maintenance: each
-    micro-batch lands as a PostingsIndex SEGMENT named by its batch id
-    — segment-name = batch id IS the exactly-once marker. Replay
-    handling, in order of where the redelivery can strike:
-
-    1. the segment dir already exists in the live generation, OR a
-       compaction folded it (the cumulative committed_segments
-       ledger in the folded manifest remembers every folded name —
-       ADVICE r14: without it, a batch tombstoned AND compacted away
-       before the checkpoint advanced would be re-landed on replay,
-       resurrecting the deleted docs) → skip before any Spark work;
-    2. a replay of a folded batch whose ids are STILL live → the
-       landing protocol's id-disjointness check raises "already
-       live" → treated as committed only when EVERY id is live;
-    3. the rename itself loses (another replay landed it mid-flight)
-       or the ledger check raises FileExistsError mid-race → OSError
-       family with segment_committed(name) True → committed, skip.
-
-    Anything else propagates: a real failure must fail the stream,
-    not be swallowed as a replay."""
-    import os
-
-    from batch_processing_etl_orchestration_spark.operators.retrieval import (
-        PostingsIndex,
-    )
-
-    def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        name = f"batch-{batch_id}"
-        idx = PostingsIndex(batch_df.sparkSession, path)
-        if idx.segment_committed(name):
-            return  # replayed batch: already committed (live or folded)
-        try:
-            idx.add_segment(batch_df.select("doc_id", "text"), name)
-        except ValueError as e:
-            if "already live" not in str(e):
-                raise  # tombstoned-id / duplicate-id: a REAL conflict
-            # "already live" is only a committed replay when EVERY
-            # batch id is live (the fold-then-redeliver case). A
-            # partial overlap — an at-least-once source re-emitting
-            # one old doc alongside fresh ones — must fail loudly, or
-            # the fresh docs silently vanish (review r14). The two
-            # verification jobs run only on this exception path.
-            ids = batch_df.select("doc_id").distinct()
-            n_live = ids.join(
-                idx._live_ids(idx._gen()), "doc_id", "left_semi"
-            ).count()
-            if n_live != ids.count():
-                raise
-        except OSError:
-            # benign ONLY as the committed-collision signature: a
-            # concurrent replay landed the segment first, or the
-            # ledger check caught a folded name mid-race. Any other
-            # OSError (disk full, permissions) must fail the stream —
-            # swallowing it would advance the checkpoint past a batch
-            # that never landed (review r14).
-            if idx.segment_committed(name):
-                return
-            raise
-        # Fold when fan-out hits the measured threshold (VERDICT r14
-        # #4, SCALE.md §segment fan-out) — the ingest path owns its
-        # merge policy. OUTSIDE the try (review r15): the just-landed
-        # segment makes segment_committed(name) true, so a real fold
-        # failure (disk full, permissions) caught by the replay
-        # handler above would be silently swallowed and the checkpoint
-        # would advance past a compaction that never happened.
-        idx.maybe_compact()
-
-    return ingest
-
-
 @register(
     "q_stream_index_maintain",
     # post-drain serving must equal a one-shot batch build over the
@@ -7309,7 +7202,7 @@ def index_stream_sink(path: str):
     tags=("streaming", "retrieval", "incremental"),
 )
 def q_stream_index_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming index maintenance (VERDICT r13 #3): a platform
+    """Streaming index maintenance: a platform
     ingests documents continuously, so the postings index must grow by
     MICRO-BATCH, not rebuild. Documents arrive as 4 ordered
     micro-batches (maxFilesPerTrigger=1 over a doc_id-ranged copy)
@@ -7363,19 +7256,7 @@ def q_stream_index_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
         empty_df(spark, "doc_id BIGINT, text STRING"),
         path,
     )
-    schema = artifact_schema(spark, src)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(index_stream_sink(path))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_files(spark, src, PostingsIndex.stream_sink(path), ckpt)
     idx = PostingsIndex(spark, path)
     return bm25_topk(idx.postings(), idx.doclens(), _BM25_TERMS, k=15)
 

@@ -54,10 +54,8 @@ from batch_processing_etl_orchestration_spark.streaming.events import (
     run_stream_to_table,
     session_stream,
 )
-from batch_processing_etl_orchestration_spark.tables import (
-    artifact_schema,
-    load_table,
-)
+from batch_processing_etl_orchestration_spark.streaming.sink import drain_files
+from batch_processing_etl_orchestration_spark.tables import load_table
 
 # ---------------------------------------------------------------------------
 # Sketch-based dedup (rows-only: engine hash functions have no ANSI twin)
@@ -334,53 +332,6 @@ def q_ann_ivf_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ann_recall_attestation(idx.probe(q, k=10, n_probe=4), q, c_live)
 
 
-def ivf_stream_sink(path: str):
-    """foreachBatch sink for streaming VECTOR-index maintenance
-    (VERDICT r14 #2) — the index_stream_sink pattern applied to
-    IvfIndex: each micro-batch lands as a segment named by its batch
-    id (segment-name = batch id IS the exactly-once marker, durable
-    across compactions via the committed_segments ledger). Replay
-    taxonomy identical to the text sink:
-
-    1. segment_committed(name) — live dir or folded ledger → skip
-       before any Spark work;
-    2. "already live" from the id-disjointness check → committed only
-       when EVERY batch id is live (partial overlap fails loudly);
-    3. OSError family with segment_committed True → a concurrent
-       replay landed it → skip. Anything else fails the stream."""
-    from batch_processing_etl_orchestration_spark.operators.similarity import (
-        IvfIndex,
-    )
-
-    def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        name = f"batch-{batch_id}"
-        idx = IvfIndex.load(batch_df.sparkSession, path)
-        if idx.segment_committed(name):
-            return
-        try:
-            idx.add_segment(batch_df.select("cand_id", "ce"), name)
-        except ValueError as e:
-            if "already live" not in str(e):
-                raise  # tombstoned / duplicate / dim mismatch: REAL
-            ids = batch_df.select("cand_id").distinct()
-            n_live = ids.join(
-                idx._live_ids(idx._gen()), "cand_id", "left_semi"
-            ).count()
-            if n_live != ids.count():
-                raise
-        except OSError:
-            if idx.segment_committed(name):
-                return
-            raise
-        # Fold at the measured fan-out threshold (VERDICT r14 #4) —
-        # OUTSIDE the try (review r15): a real fold failure must fail
-        # the stream, not be classified as a replay by the handlers
-        # above (the just-landed segment satisfies segment_committed).
-        idx.maybe_compact()
-
-    return ingest
-
-
 @register(
     "q_stream_ivf_maintain",
     # post-drain serving must reach the same recall attestation as the
@@ -451,19 +402,7 @@ def q_stream_ivf_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
         dim=64,
         centroids=cent,
     )
-    schema = artifact_schema(spark, src)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    sq = (
-        stream.writeStream.foreachBatch(ivf_stream_sink(path))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    sq.awaitTermination()
+    drain_files(spark, src, IvfIndex.stream_sink(path), ckpt)
     idx = IvfIndex.load(spark, path)
     q, c_att = _ann_queries_candidates(spark, sf_dir)
     return _ann_recall_attestation(idx.probe(q, k=10, n_probe=4), q, c_att)
@@ -1638,19 +1577,7 @@ def q_stream_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         delta_refresh(spark, delta, spec, mv, commit_token=f"batch_{batch_id}")
 
-    schema = artifact_schema(spark, src)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_files(spark, src, merge, ckpt)
 
     return read_mv(spark, spec, mv).select(
         F.date_format("p_date", "yyyy-MM-dd").alias("day"),

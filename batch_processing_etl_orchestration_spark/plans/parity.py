@@ -37,10 +37,8 @@ from batch_processing_etl_orchestration_spark.functions.exact import (
     ts_str,
 )
 from batch_processing_etl_orchestration_spark.plans.registry import register
-from batch_processing_etl_orchestration_spark.tables import (
-    artifact_schema,
-    load_table,
-)
+from batch_processing_etl_orchestration_spark.streaming.sink import drain_files
+from batch_processing_etl_orchestration_spark.tables import load_table
 
 EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
 
@@ -2164,11 +2162,11 @@ def q_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = 4+ micro-batches whose drained aggregate must equal the
     batch scan's, which is exactly what the oracle recomputes. A
     lost/duplicated page window changes counts and hash-mismatches."""
-    import time
-    import uuid as _uuid
-
     from batch_processing_etl_orchestration_spark.sources.pyds import (
         register_restpages,
+    )
+    from batch_processing_etl_orchestration_spark.streaming.events import (
+        run_stream_until,
     )
 
     register_restpages(spark)
@@ -2187,26 +2185,9 @@ def q_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # high-water mark: complete-mode totals reach exactly n_rows once
     # every page window has landed (a lost or duplicated page can
     # never sum to 2000).
-    table = f"pyds_stream_{_uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(table)
-        .outputMode("complete")
-        .start()
+    return run_stream_until(
+        agg, spark, lambda t: t.agg(F.sum("n_rows")).first()[0] == 2000
     )
-    try:
-        deadline = time.time() + 120
-        while time.time() < deadline:
-            got = spark.table(table).agg(F.sum("n_rows")).first()[0]
-            if got == 2000:
-                break
-            time.sleep(0.3)
-        else:
-            raise TimeoutError("restpages stream never drained 2000 rows")
-    finally:
-        q.stop()
-        q.awaitTermination()
-    return spark.table(table)
 
 
 # ---------------------------------------------------------------------------
@@ -3694,17 +3675,7 @@ def q_stream_merge_upserts(spark: SparkSession, sf_dir: str) -> DataFrame:
             delete_condition=F.col("c_acctbal") == -99999.0,
         )
 
-    schema = artifact_schema(spark, src_dir)
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", os.path.join(run, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_files(spark, src_dir, sink, os.path.join(run, "ckpt"))
 
     return t.read().groupBy("c_mktsegment").agg(
         F.count(F.lit(1)).alias("n_rows"),

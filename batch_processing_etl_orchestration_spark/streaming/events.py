@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -126,25 +127,59 @@ def run_stream_to_table(
     plain memory sink accumulates duplicates. For update mode pass
     ``update_keys``: micro-batches are staged via foreachBatch with
     their batch_id stamped on, and only each key's final revision
-    (max batch_id) is returned — correct under any micro-batch split."""
+    (max batch_id) is returned — correct under any micro-batch split.
+
+    Without `name` the checkpoint is throwaway and removed after the
+    drain, since nothing can resume it. The update-mode stage dir
+    stays: the returned frame reads it lazily."""
     table = name or f"stream_{uuid.uuid4().hex[:8]}"
     ckpt = os.path.join(_CHECKPOINT_ROOT, table)
-    if output_mode == "update":
-        if not update_keys:
-            raise ValueError(
-                "output_mode='update' requires update_keys so later batch "
-                "revisions of a key replace earlier ones"
-            )
-        return _run_update_stream(df, spark, table, ckpt, update_keys)
+    if output_mode == "update" and not update_keys:
+        raise ValueError(
+            "output_mode='update' requires update_keys so later batch "
+            "revisions of a key replace earlier ones"
+        )
+    try:
+        if output_mode == "update":
+            return _run_update_stream(df, spark, table, ckpt, update_keys)
+        q = (
+            df.writeStream.format("memory")
+            .queryName(table)
+            .outputMode(output_mode)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return spark.table(table)
+    finally:
+        if name is None:
+            shutil.rmtree(ckpt, ignore_errors=True)
+
+
+def run_stream_until(df: DataFrame, spark: SparkSession, done) -> DataFrame:
+    """Run a complete-mode aggregation into a memory sink on the
+    default trigger until ``done(result)`` holds, then stop it and
+    return the result as a batch DataFrame. For sources whose
+    availableNow run snapshots only their first read (a simple stream
+    reader): the drain stops at the data's own high-water mark instead.
+    Raises TimeoutError when `done` does not hold within 120 s."""
+    table = f"stream_{uuid.uuid4().hex[:8]}"
     q = (
         df.writeStream.format("memory")
         .queryName(table)
-        .outputMode(output_mode)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
+        .outputMode("complete")
         .start()
     )
-    q.awaitTermination()
+    try:
+        deadline = time.time() + 120
+        while not done(spark.table(table)):
+            if time.time() > deadline:
+                raise TimeoutError(f"stream {table} never reached done()")
+            time.sleep(0.3)
+    finally:
+        q.stop()
+        q.awaitTermination()
     return spark.table(table)
 
 

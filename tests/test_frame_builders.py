@@ -6,7 +6,12 @@ Arrow conf: the builder hands pyarrow a table directly and needs none,
 and a builder that flipped it would change the session for every later
 caller. The contract tests pin what every caller relies on: NaN kept,
 dict and tuple rows alike, empty rows as a job-free LocalRelation, and
-the session's conf left as found."""
+the session's conf left as found.
+
+The same Spark-free guards keep one streaming drain and one landing
+classifier: only streaming/ starts a writeStream, and only genstore.py
+holds the "already live" conflict text, which callers classify by the
+IdsAlreadyLive counts rather than by matching it."""
 
 from __future__ import annotations
 
@@ -64,6 +69,27 @@ def test_no_module_sets_arrow_conf():
         if isinstance(node, ast.Constant) and node.value == _ARROW_CONF
     ]
     assert not offenders, f"Arrow conf named in package code: {offenders}"
+
+
+def test_only_streaming_calls_write_stream():
+    offenders = [
+        f"{path.relative_to(_ROOT)}:{node.lineno}"
+        for path, tree in _modules()
+        if _ROOT / "streaming" not in path.parents
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Attribute) and node.attr == "writeStream"
+    ]
+    assert not offenders, f"writeStream outside streaming/: {offenders}"
+
+
+def test_only_genstore_names_the_live_id_conflict():
+    offenders = [
+        str(path.relative_to(_ROOT))
+        for path in sorted(_ROOT.rglob("*.py"))
+        if path != _ROOT / "operators" / "genstore.py"
+        and "already live" in path.read_text()
+    ]
+    assert not offenders, f"'already live' outside genstore.py: {offenders}"
 
 
 def test_nan_survives_top_level_and_in_arrays(spark):

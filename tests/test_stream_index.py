@@ -10,9 +10,15 @@ from pyspark.sql import functions as F
 from batch_processing_etl_orchestration_spark.operators.retrieval import (
     PostingsIndex,
 )
-from batch_processing_etl_orchestration_spark.plans.northstar import (
-    index_stream_sink,
-)
+
+# Upper bound on the Spark jobs of a sink replaying, under a new batch
+# id, a batch whose ids a fold made base-resident
+# (test_partial_overlap_batch_fails_loudly), as measured: the sink
+# decides "every id live" from the counts the landing's own
+# disjointness scan raised with. Recounting them took two more
+# actions, 7 more jobs. The landing-side sibling is
+# test_retrieval.LANDING_JOBS.
+REPLAY_JOBS = 9
 
 
 def _docs(spark, rows):
@@ -31,7 +37,7 @@ def test_redelivered_batch_is_noop(spark, tmp_path):
     PostingsIndex.build(
         spark, _docs(spark, []), path
     )
-    sink = index_stream_sink(path)
+    sink = PostingsIndex.stream_sink(path)
     b0 = _docs(spark, [(1, "hash join"), (2, "scan filter")])
     sink(b0, 0)
     snap = sorted(
@@ -58,7 +64,7 @@ def test_middrain_tombstones_honored(spark, tmp_path):
     a REAL conflict (propagates, not swallowed as replay)."""
     path = str(tmp_path / "sidx2")
     PostingsIndex.build(spark, _docs(spark, []), path)
-    sink = index_stream_sink(path)
+    sink = PostingsIndex.stream_sink(path)
     sink(_docs(spark, [(1, "hash join"), (2, "scan scan")]), 0)
 
     idx = PostingsIndex(spark, path)
@@ -79,14 +85,14 @@ def test_middrain_tombstones_honored(spark, tmp_path):
     assert _served(PostingsIndex(spark, path)) == {1, 3, 4, 9}
 
 
-def test_partial_overlap_batch_fails_loudly(spark, tmp_path):
+def test_partial_overlap_batch_fails_loudly(spark, tmp_path, count_jobs):
     """'already live' is only a committed replay when EVERY batch id
     is live. A batch re-emitting one old doc alongside a fresh one
     (at-least-once source weirdness) must fail the stream — swallowing
     it would silently lose the fresh doc (review r14)."""
     path = str(tmp_path / "sidx3")
     PostingsIndex.build(spark, _docs(spark, []), path)
-    sink = index_stream_sink(path)
+    sink = PostingsIndex.stream_sink(path)
     sink(_docs(spark, [(1, "hash join"), (2, "scan scan")]), 0)
 
     # full replay with a DIFFERENT batch id after a compaction fold:
@@ -94,7 +100,10 @@ def test_partial_overlap_batch_fails_loudly(spark, tmp_path):
     idx = PostingsIndex(spark, path)
     idx.delete_docs(spark.createDataFrame([(999,)], "doc_id BIGINT"))
     idx.compact_segments()
-    sink(_docs(spark, [(1, "hash join"), (2, "scan scan")]), 5)
+    _, n_jobs = count_jobs(
+        lambda: sink(_docs(spark, [(1, "hash join"), (2, "scan scan")]), 5)
+    )
+    assert n_jobs <= REPLAY_JOBS, n_jobs
     assert _served(PostingsIndex(spark, path)) == {1, 2}
 
     # partial overlap: id 1 live, id 30 fresh -> must raise
@@ -114,7 +123,7 @@ def test_folded_then_deleted_batch_replay_does_not_resurrect(
     and the replay no-ops."""
     path = str(tmp_path / "sidx4")
     PostingsIndex.build(spark, _docs(spark, []), path)
-    sink = index_stream_sink(path)
+    sink = PostingsIndex.stream_sink(path)
     sink(_docs(spark, [(1, "hash join"), (2, "scan scan")]), 0)
     sink(_docs(spark, [(10, "merge sort"), (11, "sort spill")]), 1)
 
@@ -150,7 +159,7 @@ def test_empty_batch_lands_no_segment(spark, tmp_path):
     r14). The landing protocol no-ops instead — no marker, no dir."""
     path = str(tmp_path / "sidx5")
     PostingsIndex.build(spark, _docs(spark, []), path)
-    sink = index_stream_sink(path)
+    sink = PostingsIndex.stream_sink(path)
     sink(_docs(spark, []), 0)
     idx = PostingsIndex(spark, path)
     assert idx._segment_dirs() == []
@@ -285,7 +294,7 @@ def test_rebuild_carries_committed_ledger(spark, tmp_path):
     resurrection through the retrain door)."""
     path = str(tmp_path / "sidx_rb")
     PostingsIndex.build(spark, _docs(spark, []), path)
-    sink = index_stream_sink(path)
+    sink = PostingsIndex.stream_sink(path)
     sink(_docs(spark, [(1, "hash join"), (2, "scan scan")]), 0)
     sink(_docs(spark, [(10, "merge sort"), (11, "sort spill")]), 1)
 

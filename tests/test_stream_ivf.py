@@ -12,9 +12,6 @@ from batch_processing_etl_orchestration_spark.operators.similarity import (
     IvfIndex,
     ivf_build_centroids,
 )
-from batch_processing_etl_orchestration_spark.plans.northstar_ml import (
-    ivf_stream_sink,
-)
 from batch_processing_etl_orchestration_spark.tables import load_table
 
 SF = "/root/testdata/sf0.01"
@@ -53,7 +50,7 @@ def test_ivf_redelivered_batch_is_noop(spark, tmp_path):
     c = _corpus(spark)
     path = str(tmp_path / "sivf")
     _bootstrap(spark, c, path)
-    sink = ivf_stream_sink(path)
+    sink = IvfIndex.stream_sink(path)
     b0 = c.where(F.col("cand_id") < 50)
     sink(b0, 0)
     snap = _live(path, spark)
@@ -82,7 +79,7 @@ def test_ivf_folded_then_deleted_batch_replay_does_not_resurrect(
     c = _corpus(spark)
     path = str(tmp_path / "sivf2")
     _bootstrap(spark, c, path)
-    sink = ivf_stream_sink(path)
+    sink = IvfIndex.stream_sink(path)
     b0 = c.where(F.col("cand_id") < 30)
     b1 = c.where((F.col("cand_id") >= 30) & (F.col("cand_id") < 60))
     sink(b0, 0)
@@ -105,7 +102,7 @@ def test_ivf_middrain_tombstones_and_partial_overlap(spark, tmp_path):
     c = _corpus(spark)
     path = str(tmp_path / "sivf3")
     _bootstrap(spark, c, path)
-    sink = ivf_stream_sink(path)
+    sink = IvfIndex.stream_sink(path)
     sink(c.where(F.col("cand_id") < 20), 0)
 
     idx = IvfIndex.load(spark, path)
@@ -147,7 +144,7 @@ def test_ivf_stream_drain_equals_one_shot_build(spark, tmp_path):
     c = _corpus(spark)
     path = str(tmp_path / "sivf4")
     _bootstrap(spark, c, path)
-    sink = ivf_stream_sink(path)
+    sink = IvfIndex.stream_sink(path)
     for i, lo in enumerate(range(0, 200, 50)):
         sink(
             c.where(

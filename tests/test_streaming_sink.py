@@ -12,11 +12,21 @@ import pytest
 from pyspark.sql import functions as F
 
 from batch_processing_etl_orchestration_spark.streaming.events import read_events_stream
-from batch_processing_etl_orchestration_spark.streaming.sink import stream_merge_to_table
+from batch_processing_etl_orchestration_spark.streaming.sink import (
+    _CHECKPOINT_ROOT,
+    stream_merge_to_table,
+)
 from batch_processing_etl_orchestration_spark.warehouse.catalog import create_database, create_table
 
 DB = "stream_sink_test"
 TABLE = "events_landed"
+
+
+def _checkpoints() -> set[str]:
+    """The entries under the throwaway-checkpoint root."""
+    if not os.path.isdir(_CHECKPOINT_ROOT):
+        return set()
+    return set(os.listdir(_CHECKPOINT_ROOT))
 
 
 def _table_dir(spark, table: str) -> str:
@@ -52,9 +62,12 @@ def test_stream_merge_rerun_no_duplicates(spark):
     sf = "/root/testdata/sf0.001"
     expected = load_table(spark, sf, "events").count()
 
+    before = _checkpoints()
     stream_merge_to_table(read_events_stream(spark, sf), TABLE, ["event_id"], DB)
     n1 = spark.table(f"{DB}.{TABLE}").count()
     assert n1 == expected
+    # no checkpoint= passed: the throwaway checkpoint is removed
+    assert _checkpoints() == before
 
     # fresh checkpoint → the source replays from scratch; the keyed
     # merge must swallow the duplicates
@@ -112,12 +125,17 @@ def test_stream_capped_sessions_chunked_replay_equals_batch(spark, tmp_path):
         .withColumn("ts", F.timestamp_micros(F.col("ts_us")))
         .select("user_id", "event_id", "ts")
     )
+    before = _checkpoints()
     got = run_stream_to_table(
         stateful_capped_sessions(stream),
         spark,
         output_mode="update",
         update_keys=["user_id"],
     )
+    # the throwaway checkpoint is removed; only the stage dir the
+    # returned frame reads stays
+    left = _checkpoints() - before
+    assert len(left) == 1 and next(iter(left)).endswith("_stage"), left
     expected = q_sessionize_capped(spark, sf)
     key = lambda r: tuple(r)
     assert sorted(map(key, got.collect())) == sorted(map(key, expected.collect()))
