@@ -130,8 +130,9 @@ def run_stream_to_table(
     (max batch_id) is returned — correct under any micro-batch split.
 
     Without `name` the checkpoint is throwaway and removed after the
-    drain, since nothing can resume it. The update-mode stage dir
-    stays: the returned frame reads it lazily."""
+    drain, since nothing can resume it. The update-mode stage dir is
+    always removed: the returned frame holds the final revisions
+    itself (see _run_update_stream)."""
     table = name or f"stream_{uuid.uuid4().hex[:8]}"
     ckpt = os.path.join(_CHECKPOINT_ROOT, table)
     if output_mode == "update" and not update_keys:
@@ -193,7 +194,14 @@ def _run_update_stream(
     """Drain an update-mode stream keeping each key's LAST revision.
     foreachBatch appends every micro-batch to a parquet staging dir
     with its batch_id (distributed write — no driver collect); the
-    final read keeps the max-batch_id row per key."""
+    final read keeps the max-batch_id row per key.
+
+    The final revisions are materialised with an eager
+    ``localCheckpoint`` before the stage dir is removed, so nothing is
+    left on disk. The returned frame's lineage ends at that checkpoint:
+    its blocks live in executor storage, and losing an executor that
+    holds one fails the next read of the frame (the stage it would
+    recompute from is gone); drain the stream again to recover."""
     from pyspark.sql import Window
 
     # fresh stage dir per run: a reused explicit `name` must not
@@ -205,28 +213,32 @@ def _run_update_stream(
     def write_batch(bdf: DataFrame, batch_id: int) -> None:
         bdf.withColumn("_batch_id", F.lit(batch_id)).write.mode("append").parquet(stage)
 
-    q = (
-        df.writeStream.foreachBatch(write_batch)
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    if not os.path.isdir(stage):
-        from batch_processing_etl_orchestration_spark.tables import empty_df
+    try:
+        q = (
+            df.writeStream.foreachBatch(write_batch)
+            .outputMode("update")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        if not os.path.isdir(stage):
+            from batch_processing_etl_orchestration_spark.tables import empty_df
 
-        return empty_df(spark, df.schema)
-    staged = spark.read.parquet(stage)
-    # deterministic revision pick: batch_id desc, then the remaining
-    # columns as a tiebreak in case a key ever emits more than one row
-    # within a single micro-batch
-    tiebreak = [F.col(c).desc() for c in out_cols if c not in update_keys]
-    w = Window.partitionBy(*update_keys).orderBy(
-        F.col("_batch_id").desc(), *tiebreak
-    )
-    return (
-        staged.withColumn("_rev", F.row_number().over(w))
-        .where(F.col("_rev") == 1)
-        .select(*out_cols)
-    )
+            return empty_df(spark, df.schema)
+        staged = spark.read.parquet(stage)
+        # deterministic revision pick: batch_id desc, then the remaining
+        # columns as a tiebreak in case a key ever emits more than one
+        # row within a single micro-batch
+        tiebreak = [F.col(c).desc() for c in out_cols if c not in update_keys]
+        w = Window.partitionBy(*update_keys).orderBy(
+            F.col("_batch_id").desc(), *tiebreak
+        )
+        return (
+            staged.withColumn("_rev", F.row_number().over(w))
+            .where(F.col("_rev") == 1)
+            .select(*out_cols)
+            .localCheckpoint(eager=True)
+        )
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)

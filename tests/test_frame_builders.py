@@ -8,10 +8,11 @@ caller. The contract tests pin what every caller relies on: NaN kept,
 dict and tuple rows alike, empty rows as a job-free LocalRelation, and
 the session's conf left as found.
 
-The same Spark-free guards keep one streaming drain and one landing
-classifier: only streaming/ starts a writeStream, and only genstore.py
-holds the "already live" conflict text, which callers classify by the
-IdsAlreadyLive counts rather than by matching it."""
+The same Spark-free guards keep one streaming drain, one landing
+classifier and one parquet codec: only streaming/ starts a writeStream,
+only genstore.py holds the "already live" conflict text, which callers
+classify by the IdsAlreadyLive counts rather than by matching it, and
+only session.py names the parquet compression codec."""
 
 from __future__ import annotations
 
@@ -80,6 +81,26 @@ def test_only_streaming_calls_write_stream():
         if isinstance(node, ast.Attribute) and node.attr == "writeStream"
     ]
     assert not offenders, f"writeStream outside streaming/: {offenders}"
+
+
+def test_only_session_names_the_parquet_codec():
+    """The codec is one session conf: no other module names it or
+    passes a writer's ``compression`` option."""
+    offenders = [
+        f"{path.relative_to(_ROOT)}:{node.lineno}"
+        for path, tree in _modules()
+        if path != _ROOT / "session.py"
+        for node in ast.walk(tree)
+        if (
+            isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and ("parquet.compression" in node.value or node.value == "compression")
+        )
+        or (
+            isinstance(node, ast.keyword) and node.arg == "compression"
+        )
+    ]
+    assert not offenders, f"parquet codec named outside session.py: {offenders}"
 
 
 def test_only_genstore_names_the_live_id_conflict():

@@ -132,10 +132,10 @@ def test_stream_capped_sessions_chunked_replay_equals_batch(spark, tmp_path):
         output_mode="update",
         update_keys=["user_id"],
     )
-    # the throwaway checkpoint is removed; only the stage dir the
-    # returned frame reads stays
+    # the throwaway checkpoint and the stage dir are both removed: the
+    # returned frame holds the final revisions itself
     left = _checkpoints() - before
-    assert len(left) == 1 and next(iter(left)).endswith("_stage"), left
+    assert not left, left
     expected = q_sessionize_capped(spark, sf)
     key = lambda r: tuple(r)
     assert sorted(map(key, got.collect())) == sorted(map(key, expected.collect()))

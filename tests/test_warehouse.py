@@ -61,7 +61,11 @@ def test_merge_idempotent_rerun_no_duplicates(spark):
 def test_merge_lands_one_file_by_column_name(spark):
     """A 4-partition, 100-row merge lands as one right-sized file, each
     value in its own column although the merge key is not the leading
-    column."""
+    column. The file is zstd-compressed in every column chunk and
+    sorted by the merge key."""
+    from urllib.parse import urlparse
+
+    import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
     t = "eia930_energy_sources"
@@ -72,8 +76,17 @@ def test_merge_lands_one_file_by_column_name(spark):
     assert df.rdd.getNumPartitions() == 4
     merge_idempotent(spark, df, t, ["energy_source_name"], DB)
     landed = spark.table(f"{DB}.{t}")
-    assert len(landed.inputFiles()) == 1
+    (path,) = landed.inputFiles()
     assert sorted(map(tuple, landed.collect())) == sorted(map(tuple, df.collect()))
+    f = pq.ParquetFile(urlparse(path).path)
+    codecs = {
+        f.metadata.row_group(g).column(c).compression
+        for g in range(f.metadata.num_row_groups)
+        for c in range(f.metadata.num_columns)
+    }
+    assert codecs == {"ZSTD"}, codecs
+    keys = f.read(columns=["energy_source_name"]).column(0).to_pylist()
+    assert keys == sorted(keys)
     truncate_table(spark, t, DB)
 
 
