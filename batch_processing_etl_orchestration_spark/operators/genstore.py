@@ -14,15 +14,16 @@ of warehouse.snapshots.VersionedTable._commit.
 Layout: current -> gen-<hex>/{<stores...>, _corpus.json,
 segments/<name>/{<stores...>, _corpus.json}, tombstones/t-<hex>/}.
 
-The base class owns each store's physical layout (_LAYOUTS: range-
-cluster columns, in-file sort, file count, parquet options, partition
-column) and the store-stats sidecar ``_corpus.json`` beside the base
-and every segment: ``n_docs`` (rows of the id-keyed store), ``id_lo``
-and ``id_hi`` (its id span), plus any extra aggregate a subclass asks
-for (PostingsIndex's ``total_dl``). Builds, landings and folds write
-every store through _write_store, which applies the layout and, for
-the id-keyed store, records the sidecar from the write's own job.
-_write_stats is the sidecar's one writer, _read_stats its one parser.
+The base class owns each store's physical layout (_LAYOUTS, one entry
+per store still written: range-cluster columns, in-file sort, file
+count, parquet options, partition column) and the store-stats sidecar
+``_corpus.json`` beside the base and every segment: ``n_docs`` (rows
+of the id-keyed store), ``id_lo`` and ``id_hi`` (its id span), plus
+any extra aggregate a subclass asks for (PostingsIndex's
+``total_dl``). Builds, landings and folds write every store through
+_write_store, which applies the layout and, for the id-keyed store,
+records the sidecar from the write's own job. _write_stats is the
+sidecar's one writer, _read_stats its one parser.
 
 Subclass contract:
   _STORES        every base-generation store dir (exists() checks all)
@@ -83,14 +84,15 @@ class _Layout:
 
 _ID = "<id>"
 
-# Every store of both indexes, written by build, landing and fold alike.
+# Every store build, landing and fold write through _write_store (not
+# IvfIndex's centroids: generation metadata, written whole).
 _LAYOUTS = {
-    # PostingsIndex: word-clustered, so a term scan prunes to ~1 file.
-    "positions": _Layout(("word",), ("word", _ID, "pos")),
-    # SMALL row groups (2 MB vs the 128 MB default): a range-clustered
-    # file is often one giant row group, which makes the footer-stats
-    # id pruning block-max serving relies on a no-op. A hot term then
-    # spans many row groups with narrow id windows each.
+    # PostingsIndex: word-clustered, so a term scan prunes to ~1 file;
+    # token positions ride in postings' pos column. SMALL row groups
+    # (2 MB vs the 128 MB default): a range-clustered file is often one
+    # giant row group, which makes the footer-stats id pruning
+    # block-max serving relies on a no-op. A hot term then spans many
+    # row groups with narrow id windows each.
     "postings": _Layout(
         ("word",), ("word", _ID), block_size=2 * 1024 * 1024
     ),

@@ -80,26 +80,24 @@ def doc_lengths(
 class PostingsIndex(GenerationalStore):
     """Build-once persisted posting lists, range-clustered on word,
     with the GENERATION-POINTER durability and segment/tombstone
-    lifecycle of operators/genstore.GenerationalStore (the machinery
-    was built here across r8-r13 and extracted in r14 so IvfIndex
-    shares it).
+    lifecycle of operators/genstore.GenerationalStore.
 
-    Layout: current -> gen-<hex>/{postings,doclens,positions,
-    blockstats, segments/<name>/..., tombstones/t-<hex>/}. Stores are
-    repartitionByRange(word)-clustered so a term scan prunes to ~1
-    file per generation/segment."""
+    Layout: current -> gen-<hex>/{postings,doclens,blockstats,
+    segments/<name>/..., tombstones/t-<hex>/}. One postings row per
+    (word, doc) carries tf, the doc length dl and the sorted token
+    positions pos; positions() explodes them for phrase and proximity
+    search, and BM25 readers never read pos (parquet column pruning).
+    The word-keyed stores are repartitionByRange(word)-clustered so a
+    term scan prunes to ~1 file per generation/segment. A generation
+    from the earlier layout, with a separate `positions` store, is
+    refused with a message to rebuild it."""
 
-    _STORES = ("postings", "doclens", "positions", "blockstats")
+    _STORES = ("postings", "doclens", "blockstats")
     # Every store is written flat (repartitionByRange + plain parquet,
     # never partitionBy) by build/add_segment/compact alike → eligible
     # for the one-scan multi-path read (genstore._read_flat_store).
     _FLAT_STORES = frozenset(_STORES)
-    # Segment validity is judged on the CORE stores only: a pre-r13
-    # segment has no blockstats, and silently dropping it from reads
-    # would be data loss (review r13). Legacy segments are served
-    # (blockmax falls back via corpus_stats=None) and the next
-    # compaction rebuilds them in the current format.
-    _CORE_STORES = ("postings", "doclens", "positions")
+    _CORE_STORES = _STORES
     _ID_STORE = "doclens"
 
     # Build-time doc-id blocking for block-max pruning (VERDICT r12
@@ -123,6 +121,24 @@ class PostingsIndex(GenerationalStore):
     _SEG_DOCS_PER_FILE = 32_768
 
     _META_DEFAULT = {"id_col": "doc_id", "text_col": "text"}
+
+    # A generation holding a `positions` store predates pos in postings.
+    @classmethod
+    def exists(cls, spark: SparkSession, path: str) -> bool:
+        return super().exists(spark, path) and not os.path.isdir(
+            os.path.join(path, "current", "positions")
+        )
+
+    def _gen(self) -> str:
+        gen = super()._gen()
+        if os.path.isdir(os.path.join(gen, "positions")):
+            raise ValueError(
+                f"PostingsIndex at {self.path}: generation "
+                f"{os.path.basename(gen)} keeps token positions in a "
+                "separate `positions` store, a layout this version no "
+                "longer reads; rebuild the index with PostingsIndex.build"
+            )
+        return gen
 
     @staticmethod
     def _write_meta(
@@ -241,7 +257,8 @@ class PostingsIndex(GenerationalStore):
         build — column names, order and types identical to what
         _write_stores emits (the id column's type comes from the
         input frame; everything derived is the pipeline's BIGINT
-        casts, positions' pos is posexplode's INT)."""
+        casts, and postings' pos is the sorted ARRAY<INT> of
+        posexplode positions)."""
         from pyspark.sql import types as T
 
         from batch_processing_etl_orchestration_spark.tables import empty_df
@@ -267,12 +284,9 @@ class PostingsIndex(GenerationalStore):
             )
 
         _w(
-            "positions",
-            [("word", T.StringType()), (id_col, id_t), ("pos", T.IntegerType())],
-        )
-        _w(
             "postings",
             [("word", T.StringType()), (id_col, id_t), ("tf", big), ("dl", big)]
+            + [("pos", T.ArrayType(T.IntegerType(), False))]
             + ([("blk", big)] if impact else []),
         )
         _w(
@@ -303,69 +317,79 @@ class PostingsIndex(GenerationalStore):
         impact: bool = False,
         blk_base: int = 0,
     ) -> None:
-        # postings carry the doc length DENORMALIZED (word, doc_id,
-        # tf, dl) — the impact-ordered-index trick: BM25 serving needs
-        # dl per posting, and embedding it kills the doclens shuffle
-        # join on the read path (at 10⁸ posting rows that join IS the
-        # serving cost). +8 bytes/posting at build time, paid once.
-        # ONE tokenize pass per build/ingest (r15 optimization, guide
-        # §2.3/§8: never scan the heavy opaque column twice when a
-        # lightweight derived table answers the question). The
-        # positional store carries EVERY token, so it is written FIRST
-        # and the other stores derive from its read-back: tf = rows
-        # per (word, doc), dl = Σ tf per doc (every token counted
-        # once — identical to size(split)), maxtf = max tf per doc.
-        # Impact mode writes doclens before postings — (doc_id, dl,
-        # maxtf, blk), blk from the (maxtf DESC, dl ASC) impact
-        # ordering — and reads it back for the postings join, so both
-        # stores carry the identical doc→block assignment.
-        # Read-backs below pass the WRITTEN frame's schema explicitly
-        # (r16 optimization): a bare spark.read.parquet runs a
-        # footer-reading schema-inference job per call (~0.1 s fixed
-        # overhead locally), and a landing paid four of them — with
-        # the schema known at write time they cost zero jobs.
-        spark = docs.sparkSession
-        pos_df = build_positional_postings(docs, id_col, text_col)
-        PostingsIndex._write_store(pos_df, out, "positions", n_files, id_col)
-        tf_tbl = (
-            spark.read.schema(pos_df.schema)
-            .parquet(os.path.join(out, "positions"))
-            .groupBy("word", id_col)
-            .agg(F.count(F.lit(1)).alias("tf"))
+        """Tokenize `docs` once into one row per (word, doc): tf, the
+        sorted token positions pos, and the doc length dl, denormalized
+        onto every posting so BM25 serving joins no doclens
+        (dl = size(split) = Σ tf). Doclens and blockstats derive from
+        the postings read-back.
+
+        Impact mode writes doclens first — (doc_id, dl, maxtf, blk),
+        blk from the (maxtf DESC, dl ASC) ordering — and postings take
+        blk back from its read-back, so both stores carry the same
+        doc→block assignment. The aggregate feeds the histogram, the
+        doclens write and the postings join, so it is persisted and
+        tokenized once; a lost executor's cached blocks are recomputed
+        from `docs`: that pass again, the same rows."""
+        agg = (
+            docs.select(
+                F.col(id_col), F.split(F.col(text_col), " ").alias("_tok")
+            )
+            .select(
+                F.col(id_col),
+                F.size("_tok").cast("long").alias("dl"),
+                F.posexplode("_tok").alias("_pos", "word"),
+            )
+            .groupBy("word", id_col, "dl")
+            .agg(
+                F.count(F.lit(1)).alias("tf"),
+                F.sort_array(F.collect_list("_pos")).alias("pos"),
+            )
         )
-        stats = tf_tbl.groupBy(id_col).agg(
-            F.sum("tf").cast("long").alias("dl"),
-            F.max("tf").cast("long").alias("maxtf"),
-        )
+        cols = ["word", id_col, "tf", "dl", "pos"]
         total_dl = F.sum("dl").alias("total_dl")
         if impact:
-            dl_df = PostingsIndex._with_impact_blk(
-                stats, id_col, PostingsIndex._impact_offsets(stats), blk_base
-            )
-            PostingsIndex._write_store(
-                dl_df, out, "doclens", n_files, id_col, total_dl
-            )
-            dls = (
-                spark.read.schema(dl_df.schema)
-                .parquet(os.path.join(out, "doclens"))
-                .select(id_col, "dl", "blk")
-            )
+            agg = agg.persist()
+            try:
+                stats = agg.groupBy(id_col).agg(
+                    F.max("dl").alias("dl"),
+                    F.max("tf").cast("long").alias("maxtf"),
+                )
+                dl_df = PostingsIndex._with_impact_blk(
+                    stats, id_col, PostingsIndex._impact_offsets(stats),
+                    blk_base,
+                )
+                PostingsIndex._write_store(
+                    dl_df, out, "doclens", n_files, id_col, total_dl
+                )
+                dls = PostingsIndex._read_back(dl_df, out, "doclens")
+                post_df = agg.join(dls.select(id_col, "blk"), id_col).select(
+                    *cols, "blk"
+                )
+                PostingsIndex._write_store(
+                    post_df, out, "postings", n_files, id_col
+                )
+            finally:
+                agg.unpersist()
         else:
-            dls = stats.select(id_col, "dl")
-        post_df = tf_tbl.join(dls, id_col).select(
-            "word", id_col, "tf", "dl",
-            *(("blk",) if impact else ()),
-        )
-        PostingsIndex._write_store(post_df, out, "postings", n_files, id_col)
+            post_df = agg.select(*cols)
+            PostingsIndex._write_store(post_df, out, "postings", n_files, id_col)
+        postings = PostingsIndex._read_back(post_df, out, "postings")
         if not impact:
             PostingsIndex._write_store(
-                dls, out, "doclens", n_files, id_col, total_dl
+                postings.select(id_col, "dl").distinct(),
+                out, "doclens", n_files, id_col, total_dl,
             )
         PostingsIndex._write_blockstats(
-            spark.read.schema(post_df.schema).parquet(
-                os.path.join(out, "postings")
-            ),
-            out, id_col, block_width, n_files,
+            postings, out, id_col, block_width, n_files
+        )
+
+    @staticmethod
+    def _read_back(df: DataFrame, out: str, store: str) -> DataFrame:
+        """`out/store` as just written from `df`, read with `df`'s
+        schema: a bare spark.read.parquet runs a schema-inference job
+        per call."""
+        return df.sparkSession.read.schema(df.schema).parquet(
+            os.path.join(out, store)
         )
 
     @staticmethod
@@ -448,10 +472,10 @@ class PostingsIndex(GenerationalStore):
         gen_name = f"gen-{uuid.uuid4().hex[:12]}"
         gen_dir = os.path.join(path, gen_name)
         if n == 0:
-            # Bootstrap fast path (r15 optimization): a brand-new
-            # streaming ingest builds its index EMPTY, and the full
-            # pipeline is ~5 shuffle-planned actions (plus the impact
-            # histogram collect) to produce zero rows. Write the four
+            # Bootstrap fast path: a brand-new streaming ingest builds
+            # its index EMPTY, and the full pipeline is ~4
+            # shuffle-planned actions (plus the impact histogram
+            # collect) to produce zero rows. Write the three
             # schema-bearing empty stores directly — same schemas the
             # pipeline would emit, pinned by
             # tests/test_retrieval.py::test_empty_build_fast_path.
@@ -516,17 +540,6 @@ class PostingsIndex(GenerationalStore):
                     f"add_segment: {key}={given!r} does not match the "
                     f"index's {meta[key]!r}"
                 )
-        if "block_width" not in meta:
-            # pre-r13 layout: base postings lack the denormalized dl
-            # column and blockstats/corpus metadata — a segment in the
-            # new format would break every union read with a schema
-            # mismatch (review r13). Refuse loudly; compact_segments
-            # upgrades the generation in place.
-            raise ValueError(
-                "add_segment: index uses a pre-blockstats layout; run "
-                "compact_segments() (which rebuilds the stores in the "
-                "current format) or rebuild the index first"
-            )
         id_col, text_col = meta["id_col"], meta["text_col"]
         impact = bool(meta.get("impact_blocked"))
 
@@ -567,7 +580,7 @@ class PostingsIndex(GenerationalStore):
             )
             self._write_stores(
                 docs, tmp, eff_files, id_col, text_col,
-                int(meta.get("block_width", 1)),
+                int(meta["block_width"]),
                 impact=impact,
                 blk_base=(
                     self._impact_blk_base(gen0) if impact else 0
@@ -604,11 +617,6 @@ class PostingsIndex(GenerationalStore):
                 store, segs=segs, dead=dead, gen=gen
             ).drop("blk")
 
-        def read_back(store, df):
-            return self.spark.read.schema(df.schema).parquet(
-                os.path.join(out, store)
-            )
-
         doclens = union("doclens")
         if impact:
             doclens = self._with_impact_blk(
@@ -616,48 +624,33 @@ class PostingsIndex(GenerationalStore):
             )
         # the doclens write records the sidecar, so the fold runs no
         # read-back aggregation
-        stats = self._write_store(
+        self._write_store(
             doclens, out, "doclens", n_files, id_col,
             F.sum("dl").alias("total_dl"),
         )
         postings = union("postings")
-        if "dl" not in postings.columns:
-            # legacy 3-column postings: denormalize dl during the fold
-            # so the compacted generation serves the current format
-            postings = postings.join(doclens.select(id_col, "dl"), id_col)
         if impact:
             # postings take the fresh blk back from doclens by id — the
             # single-assignment discipline of _write_stores
             postings = postings.join(
-                read_back("doclens", doclens).select(id_col, "blk"), id_col
+                self._read_back(doclens, out, "doclens").select(
+                    id_col, "blk"
+                ),
+                id_col,
             )
         postings = postings.select(
-            "word", id_col, "tf", "dl", *(("blk",) if impact else ())
+            "word", id_col, "tf", "dl", "pos", *(("blk",) if impact else ())
         )
         self._write_store(postings, out, "postings", n_files, id_col)
-        self._write_store(
-            union("positions"), out, "positions", n_files, id_col
-        )
         # blockstats are rebuilt EXACTLY from the merged stores (never
         # merged from per-segment stats): the tombstoned rows are
         # physically gone here, so every compacted generation's bounds
         # and df_blk sums are exact again. The build-time width is
-        # frozen — id growth just mints higher block ids; a LEGACY meta
-        # without a width gets a fresh one derived from the merged
-        # doclens' recorded stats (defaulting to width=1 would mint a
-        # posting-sized stats store forever).
-        block_width = meta.get("block_width")
-        if block_width is None:
-            block_width = max(
-                1,
-                ((stats["id_hi"] or 0) + 1)
-                * PostingsIndex._BLOCK_DOCS
-                // max(1, stats["n_docs"]),
-            )
-        block_width = int(block_width)
+        # frozen — id growth just mints higher block ids.
+        block_width = int(meta["block_width"])
         self._write_blockstats(
-            read_back("postings", postings), out, id_col, block_width,
-            n_files,
+            self._read_back(postings, out, "postings"), out, id_col,
+            block_width, n_files,
         )
         self._write_meta(
             out, id_col, meta["text_col"], block_width, impact=impact
@@ -675,15 +668,20 @@ class PostingsIndex(GenerationalStore):
         return self._union_store("doclens", segs=segs, dead=dead, gen=gen)
 
     def positions(self, gen: str | None = None, segs=None, dead=_UNSET) -> DataFrame:
-        return self._union_store("positions", segs=segs, dead=dead, gen=gen)
+        """(word, <id>, pos): one row per token occurrence, exploded
+        from postings' pos over the same segment and tombstone union.
+        A word filter on it still prunes the postings scan."""
+        gen = gen or self._gen()
+        return self.postings(gen, segs, dead).select(
+            "word", self._meta(gen)["id_col"], F.explode("pos").alias("pos")
+        )
 
     def corpus_stats(
         self, gen: str | None = None, segs: list[str] | None = None
     ) -> tuple[int, int] | None:
         """(n_docs, total_dl) summed from the base + segment
-        sidecars — exact while tombstone-free. None when any store
-        predates them (legacy generation): callers fall back to
-        aggregating doclens. `segs` pins an explicit segment snapshot
+        sidecars — exact while tombstone-free. None when a sidecar is
+        missing or unreadable: callers fall back to aggregating doclens. `segs` pins an explicit segment snapshot
         (see _union_store)."""
         st = self._store_stats(gen or self._gen(), segs, need=("total_dl",))
         if st is None:
@@ -993,10 +991,9 @@ def blockmax_prune_plan(
     gen = index._gen()
     meta = index._meta(gen)
     id_col = meta["id_col"]
-    width = meta.get("block_width")
-    if width is None or index.has_tombstones(gen):
+    if index.has_tombstones(gen):
         return None
-    width = int(width)
+    width = int(meta["block_width"])
     impact = bool(meta.get("impact_blocked"))
     # impact-blocked stores carry blk as a COLUMN (dl-ordered blocks);
     # classic stores derive it from the id — serving's range predicates
@@ -1005,9 +1002,7 @@ def blockmax_prune_plan(
     pred_width = 1 if impact else width
     segs = index._segment_dirs(gen)
     cst = index.corpus_stats(gen, segs=segs)
-    if cst is None:
-        # legacy stores without corpus metadata (or a mixed legacy
-        # segment): statistics would be unreliable — serve unpruned
+    if cst is None:  # a sidecar lacks corpus stats: serve unpruned
         return None
     n_docs, total_dl = cst
     if n_docs == 0:
@@ -1224,8 +1219,8 @@ def bm25_topk_blockmax(
     identical to bm25_topk — certified by the q_bm25_topk oracle and
     tests/test_retrieval.py) that only scans posting blocks whose
     score bound can reach the seed-phase threshold. Falls back to the
-    full-scan path when pruning is unavailable (tombstones, legacy
-    generations, empty index). Driver-side work is bounded: one
+    full-scan path when pruning is unavailable (tombstones, a sidecar
+    without corpus stats, empty index). Driver-side work is bounded: one
     blockstats collect (≤ |terms| × n_blocks rows) and one k-row seed
     top-k; the returned DataFrame is the final pruned-scan stage.
 

@@ -12,7 +12,8 @@ The same Spark-free guards keep one streaming drain, one landing
 classifier and one parquet codec: only streaming/ starts a writeStream,
 only genstore.py holds the "already live" conflict text, which callers
 classify by the IdsAlreadyLive counts rather than by matching it, and
-only session.py names the parquet compression codec."""
+only session.py names the parquet compression codec. One more keeps
+genstore's store layouts and the indexes' store lists in step."""
 
 from __future__ import annotations
 
@@ -111,6 +112,29 @@ def test_only_genstore_names_the_live_id_conflict():
         and "already live" in path.read_text()
     ]
     assert not offenders, f"'already live' outside genstore.py: {offenders}"
+
+
+def test_every_store_layout_names_a_live_store():
+    """genstore's _LAYOUTS holds one entry per store an index writes
+    through _write_store: every key is in some index's _STORES, and
+    every store a segment carries (_CORE_STORES) has one, so a layout
+    left behind by a retired store fails here. IvfIndex's centroids,
+    generation metadata written whole, is the one store without an
+    entry."""
+    from batch_processing_etl_orchestration_spark.operators import (
+        genstore,
+        retrieval,
+        similarity,
+    )
+
+    indexes = (retrieval.PostingsIndex, similarity.IvfIndex)
+    assert set(genstore.GenerationalStore.__subclasses__()) == set(indexes)
+    stores = {s for cls in indexes for s in cls._STORES}
+    core = {s for cls in indexes for s in cls._CORE_STORES}
+    assert set(genstore._LAYOUTS) <= stores, set(genstore._LAYOUTS) - stores
+    assert core <= set(genstore._LAYOUTS), core - set(genstore._LAYOUTS)
+    assert stores - set(genstore._LAYOUTS) == {"centroids"}
+    assert set(genstore._IMPACT_LAYOUTS) <= set(genstore._LAYOUTS)
 
 
 def test_nan_survives_top_level_and_in_arrays(spark):

@@ -20,20 +20,21 @@ from batch_processing_etl_orchestration_spark.tables import load_table
 # one small segment (test_segment_add_then_compact_equivalence), as
 # measured: the fold records its sidecar from the doclens write and
 # reads its stores back with the schemas it wrote, so it runs no
-# read-back aggregation and no schema-inference job.
-FOLD_JOBS = 13
+# read-back aggregation and no schema-inference job; token positions
+# ride in postings, so it writes three stores.
+FOLD_JOBS = 10
 # The same bound for folding one segment and one tombstone into an
 # impact-blocked PostingsIndex and into an IvfIndex
 # (test_fold_equals_fresh_build_of_live_docs): the impact fold
 # computes its block offsets from one collected histogram.
-IMPACT_FOLD_JOBS = 29
+IMPACT_FOLD_JOBS = 23
 IVF_FOLD_JOBS = 12
 # Upper bound on the Spark jobs of an append-only add_segment onto a
 # folded PostingsIndex (test_append_landing_on_folded_index_jobs), the
 # shape of every landing in a stream that folds each segment, as
 # measured: the sidecar intervals prove the batch disjoint, so the
 # landing never reads the live ids.
-LANDING_JOBS = 17
+LANDING_JOBS = 12
 
 
 @pytest.fixture(scope="module")
@@ -460,6 +461,40 @@ def test_half_written_segment_not_served(spark, tmp_path):
     )
     assert len(idx._segment_dirs()) == 1  # only the complete segment
     assert idx.doclens().count() == 3  # readers unaffected
+
+
+def test_positions_store_generation_must_be_rebuilt(spark, tmp_path):
+    """A generation from the layout that kept token positions in a
+    separate `positions` store is refused with a rebuild message,
+    never served as postings without pos; exists() reports it absent,
+    and a rebuild over it serves again."""
+    import shutil
+
+    docs = spark.createDataFrame(
+        [(1, "hash join"), (2, "scan hash")], "doc_id BIGINT, text STRING"
+    )
+    path = str(tmp_path / "idx")
+    idx = PostingsIndex.build(spark, docs, path)
+    # what marks the old layout: a `positions` store in the generation
+    gen = idx._gen()
+    shutil.copytree(
+        os.path.join(gen, "postings"), os.path.join(gen, "positions")
+    )
+    assert not PostingsIndex.exists(spark, path)
+    for call in (
+        lambda: idx.postings(),
+        lambda: idx.positions(),
+        lambda: idx.add_segment(
+            spark.createDataFrame([(3, "join")], "doc_id BIGINT, text STRING"),
+            "b1",
+        ),
+        lambda: PostingsIndex.stream_sink(path)(docs, 0),
+    ):
+        with pytest.raises(ValueError, match="rebuild the index"):
+            call()
+    PostingsIndex.build(spark, docs, path)
+    assert PostingsIndex.exists(spark, path)
+    assert PostingsIndex(spark, path).positions().count() == 4
 
 
 def test_add_segment_rejects_tombstoned_ids(spark, tmp_path):
@@ -1571,12 +1606,14 @@ def test_empty_build_fast_path(spark, tmp_path, impact):
         empty, slow, 4, "doc_id", "text",
         32 if impact else 32, impact=impact,
     )
-    for store in ("positions", "postings", "doclens", "blockstats"):
+    for store in ("postings", "doclens", "blockstats"):
         fast_s = spark.read.parquet(
             os.path.join(index._gen(), store)
         ).schema
         slow_s = spark.read.parquet(os.path.join(slow, store)).schema
         assert fast_s == slow_s, (impact, store, fast_s, slow_s)
+        if store == "postings":
+            assert fast_s["pos"].dataType.simpleString() == "array<int>"
     # lifecycle works on the fast-path index: land + serve
     index.add_segment(
         spark.createDataFrame(
