@@ -70,9 +70,10 @@ _STATS_FILE = "_corpus.json"
 @dataclasses.dataclass(frozen=True)
 class _Layout:
     """How one store is written: range-clustered on `cluster` into
-    max(1, n_files // files_div) files, each sorted on `sort`. `_ID`
-    in either stands for the index's id column. `observed` stores
-    record the sidecar (GenerationalStore._write_store)."""
+    max(1, n_files // files_div) files (n_files a cap; PostingsIndex
+    scales files with docs), each sorted on `sort`. `_ID` in either
+    stands for the index's id column. `observed` stores record the
+    sidecar (GenerationalStore._write_store)."""
 
     cluster: tuple
     sort: tuple
@@ -776,7 +777,8 @@ class GenerationalStore:
         to ~1 file per key range, tombstone bitmaps are physically
         applied, and a crash at any point leaves the previous
         generation fully live (never a double-counting half-state).
-        Returns the number of segments folded.
+        Returns the number of segments folded. `n_files` is a cap;
+        files scale with docs (IvfIndex still writes n_files).
 
         Concurrency: the fold reads a snapshot — the live generation,
         its segment dirs and its tombstone dirs. A concurrent
@@ -860,7 +862,7 @@ class GenerationalStore:
         every landing; the threshold bounds both the serving-time
         union width and the per-query segment-listing cost without
         paying a full fold per batch. Returns segments folded (0 when
-        below threshold)."""
+        below threshold). `n_files` is compact_segments' cap."""
         limit = self.MAX_SEGMENTS if max_segments is None else max_segments
         if len(self._segment_dirs()) < limit:
             return 0

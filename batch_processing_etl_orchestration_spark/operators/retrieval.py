@@ -114,11 +114,11 @@ class PostingsIndex(GenerationalStore):
     # a block count.
     _BLOCK_DOCS = 32
 
-    # Scale-adaptive segment file sizing (r15): one file per this many
-    # docs per store, capped by the caller's n_files — micro-batches
-    # land single-file stores, bulk adds spread. ~32k docs of the
+    # Build, landing and fold write one file per this many docs per
+    # store, capped by the caller's n_files (_files_for): a micro-batch
+    # writes single-file stores, a bulk build spreads. ~32k docs of the
     # fixture's ~50-word documents is a few MB of postings per file.
-    _SEG_DOCS_PER_FILE = 32_768
+    _DOCS_PER_FILE = 32_768
 
     _META_DEFAULT = {"id_col": "doc_id", "text_col": "text"}
 
@@ -139,6 +139,13 @@ class PostingsIndex(GenerationalStore):
                 "longer reads; rebuild the index with PostingsIndex.build"
             )
         return gen
+
+    @staticmethod
+    def _files_for(n_docs: int | None, n_files: int) -> int:
+        """ceil(n_docs / _DOCS_PER_FILE) in [1, n_files]; None: n_files."""
+        if n_docs is not None:
+            n_files = min(n_files, -(-n_docs // PostingsIndex._DOCS_PER_FILE))
+        return max(1, n_files)
 
     @staticmethod
     def _write_meta(
@@ -447,7 +454,8 @@ class PostingsIndex(GenerationalStore):
         same stores plus a blk column, but per-block bounds VARY so
         block-max serving actually skips blocks — the
         doc-id-reassignment lever every production IR engine pulls,
-        minus the id rewrite."""
+        minus the id rewrite. `n_files` is a cap; files scale with docs
+        (_files_for)."""
         os.makedirs(path, exist_ok=True)
         # freeze the block width off the initial id span and doc count
         # (one tiny agg action at build time; build is already a full
@@ -484,15 +492,15 @@ class PostingsIndex(GenerationalStore):
             )
         else:
             PostingsIndex._write_stores(
-                docs, gen_dir, n_files, id_col, text_col, block_width,
-                impact=impact_ordered,
+                docs, gen_dir, PostingsIndex._files_for(n, n_files),
+                id_col, text_col, block_width, impact=impact_ordered,
             )
         PostingsIndex._write_meta(
             gen_dir, id_col, text_col, block_width, impact=impact_ordered
         )
         idx = PostingsIndex(spark, path)
         # a rebuild over a live index carries the committed-segments
-        # ledger forward (review r15 — see _write_rebuild_manifest)
+        # ledger forward (see _write_rebuild_manifest)
         idx._write_rebuild_manifest(gen_dir)
         idx._publish(gen_name)  # readers never see a half-built index
         return idx
@@ -529,6 +537,7 @@ class PostingsIndex(GenerationalStore):
         segment builds under a _tmp- name and RENAMES into place, so
         a crashed attempt leaves only an ignored temp dir and the
         same name can be retried; a duplicate name fails the rename.
+        `n_files` is a cap; files scale with docs (_files_for).
 
         id_col/text_col default to the columns the index was BUILT
         with (generation meta); passing different ones is rejected —
@@ -565,26 +574,11 @@ class PostingsIndex(GenerationalStore):
             # an efficiency choice — two adds racing to the same base
             # would only merge bounds, never break exactness.
             # Compaction re-blocks globally.
-            # File count scales with the BATCH (r15 optimization,
-            # guide §6): `n_files` is the cap, the actual count grows
-            # one file per _SEG_DOCS_PER_FILE docs — a micro-batch
-            # lands 1 file per store instead of a fixed fan-out of
-            # near-empty files (which every later union read pays to
-            # list and open), while a bulk backfill still spreads.
-            eff_files = max(
-                1,
-                min(
-                    n_files,
-                    -(-int(bounds["n"]) // PostingsIndex._SEG_DOCS_PER_FILE),
-                ),
-            )
             self._write_stores(
-                docs, tmp, eff_files, id_col, text_col,
-                int(meta["block_width"]),
+                docs, tmp, self._files_for(int(bounds["n"]), n_files),
+                id_col, text_col, int(meta["block_width"]),
                 impact=impact,
-                blk_base=(
-                    self._impact_blk_base(gen0) if impact else 0
-                ),
+                blk_base=self._impact_blk_base(gen0) if impact else 0,
             )
 
         self._land_segment(
@@ -608,6 +602,10 @@ class PostingsIndex(GenerationalStore):
         meta = self._meta(gen)
         id_col = meta["id_col"]
         impact = bool(meta.get("impact_blocked"))
+        # sized by the base + segment sidecars' n_docs (an upper bound
+        # on live docs once tombstones exist; the cap if one is missing)
+        cs = self.corpus_stats(gen, segs)
+        n_files = self._files_for(None if cs is None else cs[0], n_files)
 
         def union(store):
             # impact blocking is redone globally over the folded corpus:

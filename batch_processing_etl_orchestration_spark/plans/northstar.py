@@ -2475,7 +2475,7 @@ def _postings_index(spark: SparkSession, sf_dir: str):
         lambda p: PostingsIndex.build(
             spark, load_table(spark, sf_dir, "documents"), p
         ),
-        layout=7,  # postings carry token positions (pos)
+        layout=8,  # files per store scale with the docs
     )
     return PostingsIndex(spark, path)
 
@@ -2845,7 +2845,7 @@ def _impact_index(spark: SparkSession, sf_dir: str):
             p,
             impact_ordered=True,
         ),
-        layout=2,  # postings carry token positions (pos)
+        layout=3,  # files per store scale with the docs
     )
     return PostingsIndex(spark, path)
 
@@ -4690,7 +4690,7 @@ def _segmented_index(spark: SparkSession, sf_dir: str):
 
     path = build_once(
         sf_dir, "documents.parquet", "segmented_index", _build,
-        layout=7,  # postings carry token positions (pos)
+        layout=8,  # files per store scale with the docs
     )
     return PostingsIndex(spark, path)
 
@@ -4852,7 +4852,7 @@ def _tombstoned_index(spark: SparkSession, sf_dir: str):
 
     path = build_once(
         sf_dir, "documents.parquet", "tombstoned_index", _build,
-        layout=7,  # postings carry token positions (pos)
+        layout=8,  # files per store scale with the docs
     )
     return PostingsIndex(spark, path)
 

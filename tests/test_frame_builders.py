@@ -13,7 +13,8 @@ classifier and one parquet codec: only streaming/ starts a writeStream,
 only genstore.py holds the "already live" conflict text, which callers
 classify by the IdsAlreadyLive counts rather than by matching it, and
 only session.py names the parquet compression codec. One more keeps
-genstore's store layouts and the indexes' store lists in step."""
+genstore's store layouts and the indexes' store lists in step, and one
+keeps every PostingsIndex write sized by its doc count."""
 
 from __future__ import annotations
 
@@ -135,6 +136,39 @@ def test_every_store_layout_names_a_live_store():
     assert core <= set(genstore._LAYOUTS), core - set(genstore._LAYOUTS)
     assert stores - set(genstore._LAYOUTS) == {"centroids"}
     assert set(genstore._IMPACT_LAYOUTS) <= set(genstore._LAYOUTS)
+
+
+def test_postings_index_sizes_every_write_by_doc_count():
+    """In operators/retrieval.py only PostingsIndex._files_for reads
+    the docs-per-file constant, and build, add_segment and _fold_stores
+    each call it, so a write path that brings back a fixed fan-out of
+    files fails here."""
+    tree = ast.parse((_ROOT / "operators" / "retrieval.py").read_text())
+    cls = next(
+        n for n in tree.body
+        if isinstance(n, ast.ClassDef) and n.name == "PostingsIndex"
+    )
+    funcs = {n.name: n for n in cls.body if isinstance(n, ast.FunctionDef)}
+
+    def uses(node, name):
+        return [
+            n for n in ast.walk(node)
+            if (isinstance(n, ast.Attribute) and n.attr == name)
+            or (isinstance(n, ast.Name) and n.id == name)
+        ]
+
+    reads = [
+        n for n in uses(tree, "_DOCS_PER_FILE")
+        if not isinstance(getattr(n, "ctx", None), ast.Store)
+    ]
+    assert reads and len(reads) == len(
+        uses(funcs["_files_for"], "_DOCS_PER_FILE")
+    ), [n.lineno for n in reads]
+    missing = [
+        f for f in ("build", "add_segment", "_fold_stores")
+        if not uses(funcs[f], "_files_for")
+    ]
+    assert not missing, f"writes not sized by _files_for: {missing}"
 
 
 def test_nan_survives_top_level_and_in_arrays(spark):

@@ -21,13 +21,14 @@ from batch_processing_etl_orchestration_spark.tables import load_table
 # measured: the fold records its sidecar from the doclens write and
 # reads its stores back with the schemas it wrote, so it runs no
 # read-back aggregation and no schema-inference job; token positions
-# ride in postings, so it writes three stores.
-FOLD_JOBS = 10
+# ride in postings, so it writes three stores; a fold of a few docs
+# writes one file per store, so no store write samples range bounds.
+FOLD_JOBS = 7
 # The same bound for folding one segment and one tombstone into an
 # impact-blocked PostingsIndex and into an IvfIndex
 # (test_fold_equals_fresh_build_of_live_docs): the impact fold
 # computes its block offsets from one collected histogram.
-IMPACT_FOLD_JOBS = 23
+IMPACT_FOLD_JOBS = 20
 IVF_FOLD_JOBS = 12
 # Upper bound on the Spark jobs of an append-only add_segment onto a
 # folded PostingsIndex (test_append_landing_on_folded_index_jobs), the
@@ -69,13 +70,20 @@ def test_and_search_matches_bruteforce(spark, idx):
     assert got == want and len(got) > 0
 
 
-def test_term_lookup_prunes_posting_files(spark, idx):
+def test_term_lookup_prunes_posting_files(
+    spark, sf_dir, tmp_path, monkeypatch
+):
     """Range clustering gives each posting file a compact word range;
     a single-term lookup's [term, term] interval overlaps ~1 of 16
-    files — the same footer-stats skip decision as zorder_by's audit."""
+    files — the same footer-stats skip decision as zorder_by's audit.
+    Files scale with docs, so 32 docs per file spreads the fixture's
+    documents over the 16-file cap."""
     import pyarrow.parquet as pq
 
-    index, _ = idx
+    monkeypatch.setattr(PostingsIndex, "_DOCS_PER_FILE", 32)
+    index = PostingsIndex.build(
+        spark, load_table(spark, sf_dir, "documents"), str(tmp_path / "idx")
+    )
     pdir = os.path.join(index._gen(), "postings")
     files = [f for f in os.listdir(pdir) if f.endswith(".parquet")]
     assert len(files) > 4
@@ -158,27 +166,15 @@ def test_phrase_search_exact_and_repeated_terms(spark):
     assert got2 == {1: 1, 2: 1}
 
 
-def test_phrase_scan_prunes_to_terms(spark, sf_dir):
+def test_phrase_scan_prunes_to_terms(spark, idx):
     """The positional scan must push the term IN-filter into parquet."""
-    import os
-
     from batch_processing_etl_orchestration_spark.operators.retrieval import (
-        PostingsIndex,
         phrase_search,
     )
-    from batch_processing_etl_orchestration_spark.tables import (
-        STATE_ROOT,
-        load_table,
-    )
 
-    path = os.path.join(STATE_ROOT, "test_phrase_idx")
-    if not PostingsIndex.exists(spark, path):
-        PostingsIndex.build(
-            spark, load_table(spark, sf_dir, "documents"), path
-        )
-    idx = PostingsIndex(spark, path)
+    index, _ = idx
     plan = (
-        phrase_search(idx.positions(), ["slow", "hash"])
+        phrase_search(index.positions(), ["slow", "hash"])
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -316,6 +312,8 @@ def test_fold_equals_fresh_build_of_live_docs(
     """Folding a segment and a tombstone yields, store by store, what
     a fresh build over the live docs writes: the same rows, sidecar
     and files per store, and postings keep the 2 MB row-group cap.
+    A PostingsIndex sizes its files by doc count under the n_files
+    cap, so 60 docs fold into one file per store.
     Build, landing and fold share one layout per store, so a fold
     cannot drift from the build (a fold that dropped the row-group
     cap once made block-max pruning a no-op). The fold's Spark jobs
@@ -394,10 +392,22 @@ def test_fold_equals_fresh_build_of_live_docs(
         )
         assert got == want and got, store
         assert files(folded_gen, store) == files(fresh_gen, store), store
+        if family != "ivf":
+            assert files(folded_gen, store) == 1, store
     if family != "ivf":
         for gen in (folded_gen, fresh_gen):
             opts = parquet_write_options[os.path.join(gen, "postings")]
             assert opts["parquet.block.size"] == str(2 * 1024 * 1024)
+
+
+def test_files_scale_with_docs_under_the_cap():
+    per = PostingsIndex._DOCS_PER_FILE
+    assert per == 32_768
+    for n, want in ((0, 1), (1, 1), (per, 1), (per + 1, 2), (None, 16)):
+        assert PostingsIndex._files_for(n, 16) == want, n
+    for cap in (1, 2, 4, 16):
+        for n in (0, 1, per, per + 1, 40 * per, 10**9, None):
+            assert 1 <= PostingsIndex._files_for(n, cap) <= cap, (n, cap)
 
 
 def test_tombstones_hide_then_compact_applies(spark, tmp_path):
